@@ -697,7 +697,9 @@ def load_docmap(spark: SparkSession, index_dir: str) -> DataFrame:
 
 def load_stats(index_dir: str) -> dict:
     s = mf.read_global(index_dir, "stats.json")
-    assert s is not None, f"no stats.json in {index_dir}"
+    if s is None:
+        raise FileNotFoundError(
+            f"{index_dir} has no stats.json — not a committed index")
     s["avgdl"] = {int(k): v for k, v in s["avgdl"].items()}
     if "dl_sums" in s:
         s["dl_sums"] = {int(k): v for k, v in s["dl_sums"].items()}

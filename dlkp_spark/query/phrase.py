@@ -8,7 +8,7 @@ the plain-SQL oracle computes over the same term set, restricted to docs
 whose space-joined token stream contains the phrase substring.
 
 Scale shape mirrors batch_topk: a phrase touches only its terms' posting
-rows (broadcast join), work fans out per segment (all of a doc's postings
+rows (term scan predicate), work fans out per segment (all of a doc's postings
 live in its doc-range segment, so adjacency is decided segment-locally),
 and only top-k rows leave each kernel. Position blobs decode lazily per
 touched (term, segment) row — never the whole index.
@@ -255,9 +255,8 @@ def phrase_prefix_topk(
     if not all_terms:
         return spark.createDataFrame(
             [], "query_id long, rank int, doc_id long, score double")
-    t_df = spark.createDataFrame([(t,) for t in all_terms], "term string")
-    hits = (postings.filter(F.col("field") == FIELD_BODY)
-            .join(F.broadcast(t_df), "term"))
+    hits = postings.filter((F.col("field") == FIELD_BODY)
+                           & F.col("term").isin(all_terms))
 
     def kernel(_key, g: pd.DataFrame) -> pd.DataFrame:
         by_term = _decode_positional_group(g, stats, p)
@@ -336,11 +335,10 @@ def phrase_topk(
     if not all_terms:
         return spark.createDataFrame(
             [], "query_id long, rank int, doc_id long, score double")
-    t_df = spark.createDataFrame([(t,) for t in all_terms], "term string")
     if postings is None:
         postings = load_postings(spark, index_dir)
-    hits = (postings.filter(F.col("field") == FIELD_BODY)
-            .join(F.broadcast(t_df), "term"))
+    hits = postings.filter((F.col("field") == FIELD_BODY)
+                           & F.col("term").isin(all_terms))
     use_deletes = deletes is not None
     if use_deletes:
         seg_docs = int(stats_all.get("segment_docs") or 0)

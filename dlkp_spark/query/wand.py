@@ -1,7 +1,7 @@
 """Block-max WAND document-at-a-time BM25 over the compressed index.
 
-North-star query path: broadcast query terms join the posting table,
-``groupBy(query_id, segment).applyInPandas`` runs the exact top-k kernel
+North-star query path: the query terms filter the posting scan,
+``groupBy(segment).applyInPandas`` runs the exact top-k kernel
 per doc-range segment — adaptive between block-max WAND (per-partition
 DAAT with a size-k heap; pays on long lists) and dense vectorized TAAT
 (pays on small segment slices; see ``exact_topk_lists``) — and partial
@@ -14,8 +14,8 @@ Determinism: scores accumulate per doc in (term asc, field asc) order with
 the same float64 expression order as the oracle (dlkp_spark.oracle), so
 top-k results are bit-identical, tie-broken (score desc, doc_id asc).
 
-Scale shape: a query touches only its terms' posting rows (broadcast hash
-join, predicate pushdown on term). Work parallelizes over (query, segment)
+Scale shape: a query touches only its terms' posting rows (an ``isin``
+predicate pushed into the scan). Work parallelizes over (query, segment)
 pairs — at 10^12 docs a single query fans out over n_docs/segment_docs
 segment tasks; the merge moves only k rows per segment.
 """
@@ -819,6 +819,9 @@ def batch_topk(
     where upper bounds are non-discriminative (the extra metadata
     aggregation + threshold join cost two small jobs).
 
+    Query terms select posting rows through one ``isin`` predicate pushed
+    into the parquet scan: no Spark job ships a term table to executors.
+
     ``postings`` optionally reuses an already-loaded (possibly persisted)
     posting DataFrame — a long-running query service keeps the index hot
     instead of re-listing parquet footers per batch.
@@ -845,10 +848,9 @@ def batch_topk(
     if not all_terms:
         return spark.createDataFrame([], "query_id long, rank int, doc_id long, score double")
 
-    t_df = spark.createDataFrame([(t,) for t in all_terms], "term string")
     if postings is None:
         postings = load_postings(spark, index_dir)
-    hits = postings.join(F.broadcast(t_df), "term")
+    hits = postings.filter(F.col("term").isin(all_terms))
 
     if range_filters:
         overlap = set(range_filters) & set(filters or {})
@@ -1152,12 +1154,11 @@ def synonym_topk(
     if not all_terms:
         return spark.createDataFrame(
             [], "query_id long, rank int, doc_id long, score double")
-    t_df = spark.createDataFrame([(t,) for t in all_terms], "term string")
     if postings is None:
         postings = load_postings(spark, index_dir)
+    hits = postings.filter(F.col("term").isin(all_terms))
     # global per-(term, field) df from metadata — tiny (|terms| × 2 rows)
-    df_rows = (postings.select("term", "field", "df")
-               .join(F.broadcast(t_df), "term").distinct().collect())
+    df_rows = hits.select("term", "field", "df").distinct().collect()
     term_df = {(r["term"], int(r["field"])): int(r["df"]) for r in df_rows}
     fields = sorted({int(r["field"]) for r in df_rows}) or [FIELD_BODY]
     # df_max per (clause, field), resolved once for the whole index
@@ -1168,8 +1169,6 @@ def synonym_topk(
                 dfs = [term_df[(t, f)] for t in cl if (t, f) in term_df]
                 if dfs:
                     clause_df[(cl, f)] = max(dfs)
-
-    hits = postings.join(F.broadcast(t_df), "term")
 
     def kernel(_key, g: pd.DataFrame) -> pd.DataFrame:
         docs_f, tfs_f, dls_f, counts = decode_postings_batch(
@@ -1271,7 +1270,6 @@ def collapse_topk(
     if not all_terms:
         return spark.createDataFrame(
             [], "query_id long, rank int, doc_id long, score double, value string")
-    t_df = spark.createDataFrame([(t,) for t in all_terms], "term string")
     if postings is None:
         postings = load_postings(spark, index_dir)
     vals = (load_attrs(spark, index_dir).filter(F.col("attr") == attr)
@@ -1281,7 +1279,8 @@ def collapse_topk(
     # segment with zero docs carrying the attribute, so that segment's
     # docs could never rank — ES null-bucket semantics say they compete in
     # the shared null group, exactly like per-doc missing values
-    hits = postings.join(F.broadcast(t_df), "term").join(vals, "segment", "left")
+    hits = (postings.filter(F.col("term").isin(all_terms))
+            .join(vals, "segment", "left"))
 
     def kernel(_key, g: pd.DataFrame) -> pd.DataFrame:
         vrow = g["vals"].iloc[0]
@@ -1386,10 +1385,9 @@ def dismax_topk(
     if not all_terms:
         return spark.createDataFrame(
             [], "query_id long, rank int, doc_id long, score double")
-    t_df = spark.createDataFrame([(t,) for t in all_terms], "term string")
     if postings is None:
         postings = load_postings(spark, index_dir)
-    hits = postings.join(F.broadcast(t_df), "term")
+    hits = postings.filter(F.col("term").isin(all_terms))
 
     def kernel(_key, g: pd.DataFrame) -> pd.DataFrame:
         lists = _decode_group(g, stats, p)
@@ -1568,11 +1566,10 @@ def match_counts(
     all_terms = sorted({t for _, terms in qmap for t in terms})
     if not all_terms:
         return spark.createDataFrame([], "query_id long, n_docs long")
-    t_df = spark.createDataFrame([(t,) for t in all_terms], "term string")
     if postings is None:
         postings = load_postings(spark, index_dir)
-    hits = (postings.select("term", "segment", "docs_vb")
-            .join(F.broadcast(t_df), "term"))
+    hits = (postings.filter(F.col("term").isin(all_terms))
+            .select("term", "segment", "docs_vb"))
 
     def kernel(_key, g: pd.DataFrame) -> pd.DataFrame:
         by_term: dict[str, np.ndarray] = {}
@@ -1638,14 +1635,13 @@ def facet_counts(
     all_terms = sorted({t for _, terms in qmap for t in terms})
     if not all_terms:
         return spark.createDataFrame([], "query_id long, value string, n_docs long")
-    t_df = spark.createDataFrame([(t,) for t in all_terms], "term string")
     if postings is None:
         postings = load_postings(spark, index_dir)
     flt = (load_attrs(spark, index_dir).filter(F.col("attr") == attr)
            .groupBy("segment")
            .agg(F.collect_list(F.struct("value", "docs_vb")).alias("vals")))
-    hits = (postings.select("term", "segment", "docs_vb")
-            .join(F.broadcast(t_df), "term")
+    hits = (postings.filter(F.col("term").isin(all_terms))
+            .select("term", "segment", "docs_vb")
             .join(flt, "segment"))
 
     def kernel(_key, g: pd.DataFrame) -> pd.DataFrame:
@@ -1852,11 +1848,10 @@ def explain_scores(
     if not all_terms or not len(wanted):
         return spark.createDataFrame([], schema)
     segs = sorted({int(d) // seg_docs for d in wanted})
-    t_df = spark.createDataFrame([(t,) for t in all_terms], "term string")
     if postings is None:
         postings = load_postings(spark, index_dir)
-    hits = (postings.filter(F.col("segment").isin(segs))
-            .join(F.broadcast(t_df), "term"))
+    hits = postings.filter(F.col("segment").isin(segs)
+                           & F.col("term").isin(all_terms))
 
     def kernel(_key, g: pd.DataFrame) -> pd.DataFrame:
         lists = _decode_group(g, stats, p)
@@ -1923,9 +1918,8 @@ def two_wave_pair_counts(
     pair_rows = [(qid, t) for qid, terms in qmap for t in terms]
     qt_df = spark.createDataFrame(pair_rows, "query_id long, term string")
     postings = load_postings(spark, index_dir)
-    t_df = spark.createDataFrame(
-        [(t,) for t in sorted({t for _, ts in qmap for t in ts})], "term string")
-    hits = postings.join(F.broadcast(t_df), "term")
+    hits = postings.filter(
+        F.col("term").isin(sorted({t for _, ts in qmap for t in ts})))
     boost = F.when(F.col("field") == FIELD_KP, F.lit(p.kp_boost)).otherwise(F.lit(1.0))
     ub = (postings.select("term", "field", "segment", "max_contrib", "n_postings")
           .join(F.broadcast(qt_df), "term")

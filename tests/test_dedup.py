@@ -166,5 +166,6 @@ def test_simhash_default_knob_recall_on_driver_testdata_sf01(spark):
            simhash_pairs(docs, max_hamming=3).collect()}
     sig.unpersist()
     assert got <= truth  # bit_count verify => no false positives
-    recall = len(got & truth) / max(len(truth), 1)
+    assert truth  # recall over an empty ground truth proves nothing
+    recall = len(got & truth) / len(truth)
     assert recall >= 0.95, f"simhash default-knob recall {recall:.3f}"

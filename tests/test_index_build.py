@@ -132,6 +132,17 @@ def test_stats_and_manifests_written(index_dir):
         assert m["lineage"]["filter"] == f"segment % 3 == {shard}"
 
 
+def test_query_on_dir_without_stats_raises(spark, tmp_path):
+    """Every query call loads stats.json first; a dir without one raises a
+    typed error naming the dir (an ``assert`` would vanish under -O)."""
+    import re
+
+    from dlkp_spark.query.wand import batch_topk
+
+    with pytest.raises(FileNotFoundError, match=re.escape(str(tmp_path))):
+        batch_topk(spark, str(tmp_path), [(0, ["w0003"])], k=5)
+
+
 def test_resume_skips_committed_and_completes(spark, docs, tmp_path):
     d = str(tmp_path / "idx2")
     # full build, then delete one shard's manifest + data to simulate a crash

@@ -3,6 +3,8 @@ must actually appear in the plan (predicate pushdown, column pruning,
 broadcast joins) — regressions here silently cost 10-100× at scale.
 """
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -39,11 +41,81 @@ def test_posting_scan_prunes_columns(spark, index_dir):
     assert read_schema and "docs_vb" not in read_schema[0], plan
 
 
-def test_query_terms_join_is_broadcast(spark, index_dir):
-    from dlkp_spark.query.wand import wand_topk
-    df = wand_topk(spark, index_dir, [(0, ["w0003", "w0010"])], BM25Params(), k=5)
-    plan = plan_of(df)
-    assert "BroadcastHashJoin" in plan or "BroadcastExchange" in plan, plan
+@pytest.fixture(scope="module")
+def query_table(spark, tmp_path_factory):
+    """A snapshot table whose index carries positions and a ``lang``
+    attribute sidecar, so every segment-query entry point can run on it."""
+    from dlkp_spark.index import snapshots as sn
+
+    t = str(tmp_path_factory.mktemp("planqt")) + "/tbl"
+    docs = prepare_docs(generate_web_pages(spark, 120, seed=42))
+    sn.commit_build(spark, docs, t,
+                    cfg=IndexConfig(segment_docs=64, block_size=16,
+                                    n_term_partitions=4, positions=True),
+                    n_shards=1, attrs=("lang",))
+    return t, sn.index_dir_of(t)
+
+
+TERMS = ["w0003", "w0010"]
+
+
+def _segment_queries():
+    from dlkp_spark.index.snapshots import snapshot_topk
+    from dlkp_spark.query import phrase, wand
+
+    q = [(0, TERMS)]
+    return {
+        "batch_topk": lambda s, t, d: wand.batch_topk(s, d, q, k=5),
+        "wand_topk": lambda s, t, d: wand.wand_topk(s, d, q, k=5),
+        "snapshot_topk": lambda s, t, d: snapshot_topk(s, t, q, k=5),
+        "synonym_topk": lambda s, t, d: wand.synonym_topk(
+            s, d, [(0, [TERMS])], k=5),
+        "collapse_topk": lambda s, t, d: wand.collapse_topk(
+            s, d, q, "lang", k=5),
+        "dismax_topk": lambda s, t, d: wand.dismax_topk(s, d, q, k=5),
+        "match_counts": lambda s, t, d: wand.match_counts(s, d, q),
+        "facet_counts": lambda s, t, d: wand.facet_counts(s, d, q, "lang"),
+        "explain_scores": lambda s, t, d: wand.explain_scores(
+            s, d, q, [0, 1, 2]),
+        "phrase_topk": lambda s, t, d: phrase.phrase_topk(s, d, q, k=5),
+        "phrase_prefix_topk": lambda s, t, d: phrase.phrase_prefix_topk(
+            s, d, q, k=5),
+    }
+
+
+@pytest.mark.parametrize("entry", sorted(_segment_queries()))
+def test_query_terms_are_a_pushed_scan_predicate(spark, query_table, entry):
+    """Query terms reach the posting scan as a pushed-down ``isin``
+    predicate, never as a joined local DataFrame: a local term list
+    becomes a Python RDD (``Scan ExistingRDD``) whose broadcast costs one
+    Spark job of Python tasks per call."""
+    t, d = query_table
+    plan = plan_of(_segment_queries()[entry](spark, t, d))
+    scans = [ln for ln in plan.splitlines()
+             if "FileScan parquet" in ln and "docs_vb" in ln]
+    assert scans, plan
+    pushed = [ln.partition("PushedFilters:")[2] for ln in scans]
+    assert any(all(term in f for term in TERMS) for f in pushed), plan
+    assert "Scan ExistingRDD" not in plan, plan
+    assert not re.search(r"Join[^\n]*\[term#", plan), plan
+
+
+def test_single_query_job_budget(spark, index_dir):
+    """A 1-query batch_topk runs at most 3 Spark jobs once the listing
+    cache is warm: no job may exist just to ship the query terms."""
+    from dlkp_spark.query.wand import batch_topk
+
+    q = [(0, TERMS)]
+    batch_topk(spark, index_dir, q, k=5).collect()  # warm the listing cache
+    sc = spark.sparkContext
+    sc.setJobGroup("job-budget", "1-query batch_topk")
+    try:
+        batch_topk(spark, index_dir, q, k=5).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jobs = sc.statusTracker().getJobIdsForGroup("job-budget")
+    assert len(jobs) <= 3, jobs
 
 
 def test_exact_bm25_broadcasts_query_side(spark):
