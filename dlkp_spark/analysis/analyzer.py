@@ -108,6 +108,17 @@ def analyze(web_pages: DataFrame, validate: bool = True) -> DataFrame:
     return web_pages.mapInPandas(run, schema)
 
 
+# with_doc_ids' scale path broadcasts the slim (url, doc_id) map up to this
+# many docs (guide §3.1 — broadcast the side that fits): a hash join there
+# shuffles the WIDE docs frame (token/keyphrase arrays) by url, the single
+# largest exchange of the whole build (measured at 400k docs: the id attach
+# cost ~8 s against a perfectly-scaling tagger stage). The map is ~60 B/row,
+# so 4M rows ≈ 240 MB — inside executor broadcast budgets; beyond that the
+# distributed join is the honest path and the wide shuffle is amortized by
+# the corpus size that forced it.
+DOC_ID_BROADCAST_ROWS = 4_000_000
+
+
 def with_doc_ids(docs: DataFrame, scale_threshold: int = 100_000,
                  n_range_parts: int | None = None,
                  n_docs: int | None = None,
@@ -181,14 +192,6 @@ def with_doc_ids(docs: DataFrame, scale_threshold: int = 100_000,
            .join(F.broadcast(offsets), "_part")
            .withColumn("doc_id", F.col("_off") + F.col("_rn") - 1)
            .select("url", "doc_id"))
-    # broadcast the slim (url, doc_id) map while it is bounded (guide §3.1
-    # — broadcast the side that fits): a hash join here shuffles the WIDE
-    # docs frame (token/keyphrase arrays) by url, the single largest
-    # exchange of the whole build (measured at 400k docs: the id attach
-    # cost ~8 s against a perfectly-scaling tagger stage). The map is
-    # ~60 B/row, so 4M rows ≈ 240 MB — inside executor broadcast budgets;
-    # beyond that the distributed join is the honest path and the wide
-    # shuffle is amortized by the corpus size that forced it.
-    if n <= 4_000_000:
+    if n <= DOC_ID_BROADCAST_ROWS:
         ids = F.broadcast(ids)
     return docs.join(ids, "url")

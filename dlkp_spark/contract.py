@@ -22,6 +22,7 @@ CONTRACT RULES (learned from driver round 1):
 
 from __future__ import annotations
 
+import functools
 import os
 import tempfile
 
@@ -40,6 +41,35 @@ K = 10
 _SHIPPED_SESSIONS: set[int] = set()
 
 
+@functools.cache
+def _package_zip() -> str | None:
+    """A zip of this package's ``.py`` sources for ``addPyFile``, or None.
+
+    Built once per process in a private temp dir that is removed at exit,
+    so no archive left by another process (a reused pid, a killed run) is
+    ever shipped. None when the package is itself imported from an archive
+    (e.g. ``spark-submit --py-files``): the workers already have it, and
+    there is no source tree to pack.
+    """
+    import zipfile
+
+    pkg_dir = os.path.dirname(os.path.abspath(__file__))
+    if not os.path.isdir(pkg_dir):
+        return None
+    # the dir's random name also keeps the file name unique among a
+    # session's py-files (spark-submit may already ship a dlkp_spark.zip)
+    tmp = _staging_dir("dlkp_spark_pkg_")
+    zip_path = os.path.join(tmp, os.path.basename(tmp) + ".zip")
+    with zipfile.ZipFile(zip_path, "w") as zf:
+        for root, _dirs, files in os.walk(pkg_dir):
+            for fname in files:
+                if fname.endswith(".py"):
+                    full = os.path.join(root, fname)
+                    zf.write(full, os.path.join(
+                        "dlkp_spark", os.path.relpath(full, pkg_dir)))
+    return zip_path
+
+
 def ensure_shipped(spark: SparkSession) -> None:
     """Ship the dlkp_spark package to executor Python workers.
 
@@ -51,21 +81,9 @@ def ensure_shipped(spark: SparkSession) -> None:
     """
     if id(spark) in _SHIPPED_SESSIONS:
         return
-    import zipfile
-
-    pkg_dir = os.path.dirname(os.path.abspath(__file__))
-    # rebuild per process so a stale zip never ships old code
-    zip_path = os.path.join(tempfile.gettempdir(), f"dlkp_spark_pkg_{os.getpid()}.zip")
-    if not os.path.exists(zip_path):
-        with zipfile.ZipFile(zip_path, "w") as zf:
-            for root, _dirs, files in os.walk(pkg_dir):
-                for fname in files:
-                    if fname.endswith(".py"):
-                        full = os.path.join(root, fname)
-                        rel = os.path.join("dlkp_spark",
-                                           os.path.relpath(full, pkg_dir))
-                        zf.write(full, rel)
-    spark.sparkContext.addPyFile(zip_path)
+    zip_path = _package_zip()
+    if zip_path is not None:
+        spark.sparkContext.addPyFile(zip_path)
     _SHIPPED_SESSIONS.add(id(spark))
 
 
@@ -2085,8 +2103,8 @@ _STAGING_DIRS: list[str] = []
 
 
 def _staging_dir(prefix: str) -> str:
-    """tempdir for source round-trip queries, removed at process exit —
-    repeated driver runs must not leak copies of the documents table."""
+    """tempdir removed at process exit — repeated driver runs must leak
+    neither copies of the documents table nor package zips."""
     import atexit
     import shutil
 

@@ -624,12 +624,14 @@ def build_index(
 # 1-2 s query call on a many-file index. Re-using the lazy DataFrame keeps
 # the listing; NO ROW DATA is cached (each query still scans parquet), and
 # the entry is keyed on the dataset's mtimes so a rebuild/merge/delete at
-# the same path invalidates it. This is the manifest-metadata argument for
-# table formats (Iceberg et al.) applied at session scope.
+# the same path invalidates it. A path os.stat cannot see (a ``file://``
+# URI, a remote store) has no key, so it is read fresh every time. This is
+# the manifest-metadata argument for table formats (Iceberg et al.) applied
+# at session scope.
 _DATASET_CACHE: dict[tuple, DataFrame] = {}
 
 
-def _dataset_mtimes(path: str) -> tuple:
+def _dataset_mtimes(path: str) -> tuple | None:
     try:
         entries = [(path, os.stat(path).st_mtime_ns)]
         for e in sorted(os.listdir(path)):
@@ -637,11 +639,14 @@ def _dataset_mtimes(path: str) -> tuple:
             entries.append((e, os.stat(p).st_mtime_ns))
         return tuple(entries)
     except OSError:
-        return ("missing",)
+        return None
 
 
 def _read_dataset(spark: SparkSession, path: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, path, _dataset_mtimes(path))
+    mtimes = _dataset_mtimes(path)
+    if mtimes is None:
+        return spark.read.parquet(path)
+    key = (spark.sparkContext.applicationId, path, mtimes)
     df = _DATASET_CACHE.get(key)
     if df is None:
         # drop stale entries for the same path (old mtimes) to bound growth

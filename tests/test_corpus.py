@@ -48,6 +48,27 @@ def test_doc_ids_scale_path_matches_window_path(spark):
     assert small == scale
 
 
+def test_doc_ids_distributed_join_matches_broadcast(spark, monkeypatch):
+    """Past DOC_ID_BROADCAST_ROWS the scale path joins the (url, doc_id)
+    map without a broadcast hint; the mapping must not change."""
+    from dlkp_spark.analysis import analyzer
+
+    pages = generate_web_pages(spark, 120, seed=3)
+
+    def ids():
+        df = with_doc_ids(pages, scale_threshold=10, n_range_parts=4)
+        hints = df._jdf.queryExecution().analyzed().toString().count(
+            "strategy=broadcast")
+        return hints, sorted(df.select("url", "doc_id").collect())
+
+    bc_hints, bc = ids()
+    monkeypatch.setattr(analyzer, "DOC_ID_BROADCAST_ROWS", 0)
+    dj_hints, dj = ids()
+    assert dj_hints == bc_hints - 1  # only the offsets table stays hinted
+    assert dj == bc
+    assert [r["doc_id"] for r in dj] == list(range(120))
+
+
 def test_cache_registry_bounded_and_releasable(spark):
     """The persist registry must stay bounded (oldest entries released
     past the cap) and release_cached must unpersist what remains."""

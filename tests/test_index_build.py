@@ -143,6 +143,20 @@ def test_query_on_dir_without_stats_raises(spark, tmp_path):
         batch_topk(spark, str(tmp_path), [(0, ["w0003"])], k=5)
 
 
+def test_read_dataset_uri_sees_rewrite_in_place(spark, tmp_path):
+    """os.stat cannot key a ``file://`` URI (or a remote path), so the
+    listing cache must not hold its handle: a dataset rewritten in place
+    is read fresh."""
+    from dlkp_spark.index.build import _read_dataset
+
+    d = str(tmp_path / "ds")
+    spark.range(5).write.parquet(d)
+    uri = "file://" + d
+    assert _read_dataset(spark, uri).count() == 5
+    spark.range(7).write.mode("overwrite").parquet(d)
+    assert _read_dataset(spark, uri).count() == 7
+
+
 def test_resume_skips_committed_and_completes(spark, docs, tmp_path):
     d = str(tmp_path / "idx2")
     # full build, then delete one shard's manifest + data to simulate a crash
