@@ -409,10 +409,11 @@ def read_postings(spark: SparkSession, table_dir: str,
     for bid in snap.get("stream_batches", []):
         paths.append(os.path.join(vdir, "stream", f"batch={bid}", "segments"))
     missing = [p for p in paths if not os.path.isdir(p)]
-    assert not missing, (
-        f"snapshot {snap['snapshot_id']} references segment data that is "
-        f"gone: {missing} — a retained snapshot's files must never be "
-        "deleted (expire_snapshots only reclaims unreferenced dirs)")
+    if missing:
+        raise FileNotFoundError(
+            f"snapshot {snap['snapshot_id']} references segment data that is "
+            f"gone: {missing} — a retained snapshot's files must never be "
+            "deleted (expire_snapshots only reclaims unreferenced dirs)")
     parts = [spark.read.parquet(p).drop("shard") for p in paths]
     out = parts[0]
     for p in parts[1:]:

@@ -258,7 +258,7 @@ def phrase_prefix_topk(
     hits = postings.filter((F.col("field") == FIELD_BODY)
                            & F.col("term").isin(all_terms))
 
-    def kernel(_key, g: pd.DataFrame) -> pd.DataFrame:
+    def kernel(_key: tuple, g: pd.DataFrame) -> pd.DataFrame:
         by_term = _decode_positional_group(g, stats, p)
         qids, dids, scores = [], [], []
         for qid, terms in qmap:
@@ -351,7 +351,7 @@ def phrase_topk(
                    .agg(F.sort_array(F.collect_list("doc_id")).alias("del_ids")))
         hits = hits.join(seg_del, "segment", "left")
 
-    def kernel(_key, g: pd.DataFrame) -> pd.DataFrame:
+    def kernel(_key: tuple, g: pd.DataFrame) -> pd.DataFrame:
         deleted = None
         if use_deletes:
             raw = g["del_ids"].iloc[0]

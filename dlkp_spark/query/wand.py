@@ -15,15 +15,21 @@ the same float64 expression order as the oracle (dlkp_spark.oracle), so
 top-k results are bit-identical, tie-broken (score desc, doc_id asc).
 
 Scale shape: a query touches only its terms' posting rows (an ``isin``
-predicate pushed into the scan). Work parallelizes over (query, segment)
-pairs — at 10^12 docs a single query fans out over n_docs/segment_docs
-segment tasks; the merge moves only k rows per segment.
+predicate pushed into the scan). ``batch_topk`` picks one of two plans
+around the same per-segment kernel, from a bound on the posting rows the
+call can select (|terms| × 2 fields × ceil(n_docs / segment_docs), from
+stats, no Spark job). At or under ``SINGLE_TASK_MAX_ROWS`` the whole query
+runs as ONE task — ``coalesce(1).mapInPandas``, the task scores every
+segment and ranks — so an interactive query costs one job and no
+exchange. Above it, work parallelizes over segments — at 10^12 docs a
+single query fans out over n_docs/segment_docs segment tasks; the merge
+moves only k rows per segment.
 """
 
 from __future__ import annotations
 
 import heapq
-from collections.abc import Iterable
+from collections.abc import Iterable, Iterator
 
 import numpy as np
 import pandas as pd
@@ -552,7 +558,7 @@ def _make_batch_kernel(qmap, stats, p, k, block_size, scoped: bool,
     """
     qterms = dict(qmap)
 
-    def kernel(_key, g: pd.DataFrame) -> pd.DataFrame:
+    def kernel(_key: tuple, g: pd.DataFrame) -> pd.DataFrame:
         if scoped:
             live = [(int(q), qterms[int(q)]) for q in g["qids"].iloc[0]]
             g = g.drop(columns=["qids"])
@@ -698,6 +704,25 @@ def _expand_range_filters(spark: SparkSession, index_dir: str,
     return out
 
 
+def _segment_count(n_docs: int, segment_docs: int | None) -> int | None:
+    """Doc-range segments of an index from its stats, with no Spark job:
+    ceil(n_docs / segment_docs); None when the stats carry no
+    segment_docs. Exact for an uncompacted index and an upper bound after
+    compaction (merge multiplies segment_docs in the rewritten stats)."""
+    if not segment_docs:
+        return None
+    return -(-int(n_docs) // int(segment_docs))
+
+
+# batch_topk runs a one-wave query as ONE task while the posting rows it
+# can select (bound: |terms| × 2 fields × segments) stay at or under this
+# many. The task decodes and scores every row serially, so past some size
+# the parallel plan's two extra stages pay for themselves: on a 4-core
+# host (local[4]) the plans crossed between 21k and 28k bound rows (sweep
+# in ROADMAP.md, direction 1), so the cutoff sits just under that.
+SINGLE_TASK_MAX_ROWS = 20_000
+
+
 def _should_two_wave(n_docs: int, segment_docs: int | None,
                      cutoff: int) -> bool:
     """two_wave="auto" dispatch: prune only when the index is segmented
@@ -714,9 +739,33 @@ def _should_two_wave(n_docs: int, segment_docs: int | None,
     rewritten stats), so "auto" errs toward pruning on large indexes —
     the side where mispredicting costs O(seconds), not O(index scan).
     """
-    if not segment_docs:
-        return False
-    return -(-int(n_docs) // int(segment_docs)) >= cutoff
+    n_seg = _segment_count(n_docs, segment_docs)
+    return n_seg is not None and n_seg >= cutoff
+
+
+def _single_task_topk(hits: DataFrame, kernel, k: int) -> DataFrame:
+    """Run a small one-wave query in one task: the task concatenates its
+    Arrow batches, runs the per-segment batch kernel on each ``segment``
+    group, and ranks each query by (score desc, doc_id asc) itself — the
+    same rows the parallel plan's segment exchange + row_number window
+    give, with no Exchange and one Spark job."""
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        parts = [b for b in batches if len(b)]
+        if not parts:
+            return
+        rows = pd.concat(parts, ignore_index=True)
+        top = pd.concat([kernel((seg,), g)
+                         for seg, g in rows.groupby("segment", sort=True)],
+                        ignore_index=True)
+        top = top.sort_values(["query_id", "score", "doc_id"],
+                              ascending=[True, False, True])
+        top["rank"] = (top.groupby("query_id").cumcount() + 1).astype("int32")
+        yield top[top["rank"] <= k][["query_id", "rank", "doc_id", "score"]]
+
+    # rank is NOT NULL, as row_number() makes it on the parallel plan
+    return hits.coalesce(1).mapInPandas(
+        run, "query_id long, rank int not null, doc_id long, score double")
 
 
 def batch_topk(
@@ -822,6 +871,16 @@ def batch_topk(
     Query terms select posting rows through one ``isin`` predicate pushed
     into the parquet scan: no Spark job ships a term table to executors.
 
+    Plan choice (one-wave calls without ``filters``/``range_filters`` or
+    ``deletes``): when the selectable posting rows, bounded from stats by
+    |terms| × 2 fields × ceil(n_docs / segment_docs), are at most
+    ``SINGLE_TASK_MAX_ROWS``, the call runs as one task
+    (``coalesce(1).mapInPandas``: every segment through the same kernel,
+    then a per-query (score desc, doc_id asc) rank in the task) — one job,
+    no exchange. Otherwise, and for two-wave, filtered or delete-masked
+    calls, ``groupBy(segment).applyInPandas`` plus the ``row_number``
+    window. Both plans return identical rows.
+
     ``postings`` optionally reuses an already-loaded (possibly persisted)
     posting DataFrame — a long-running query service keeps the index hot
     instead of re-listing parquet footers per batch.
@@ -916,6 +975,12 @@ def batch_topk(
                                     filter_attrs=filter_attrs,
                                     use_deletes=use_deletes, qweights=qweights,
                                     after=after, must_not=must_not)
+        n_seg = _segment_count(stats_all["n_docs"],
+                               stats_all.get("segment_docs"))
+        # 2 fields: one posting row per (term, field, segment)
+        if not filters and not use_deletes and n_seg is not None \
+                and len(all_terms) * 2 * n_seg <= SINGLE_TASK_MAX_ROWS:
+            return _single_task_topk(hits, kernel, k)
         partials = hits.groupBy("segment").applyInPandas(
             kernel, "query_id long, doc_id long, score double")
         return (partials.withColumn("rank", F.row_number().over(w))
@@ -1170,7 +1235,7 @@ def synonym_topk(
                 if dfs:
                     clause_df[(cl, f)] = max(dfs)
 
-    def kernel(_key, g: pd.DataFrame) -> pd.DataFrame:
+    def kernel(_key: tuple, g: pd.DataFrame) -> pd.DataFrame:
         docs_f, tfs_f, dls_f, counts = decode_postings_batch(
             g["docs_vb"].tolist(), g["tfs_vb"].tolist(), g["dls_vb"].tolist())
         offsets = np.concatenate(([0], np.cumsum(counts)))
@@ -1282,7 +1347,7 @@ def collapse_topk(
     hits = (postings.filter(F.col("term").isin(all_terms))
             .join(vals, "segment", "left"))
 
-    def kernel(_key, g: pd.DataFrame) -> pd.DataFrame:
+    def kernel(_key: tuple, g: pd.DataFrame) -> pd.DataFrame:
         vrow = g["vals"].iloc[0]
         value_docs = [(r["value"],
                        delta_decode(varbyte_decode(r["docs_vb"])
@@ -1389,7 +1454,7 @@ def dismax_topk(
         postings = load_postings(spark, index_dir)
     hits = postings.filter(F.col("term").isin(all_terms))
 
-    def kernel(_key, g: pd.DataFrame) -> pd.DataFrame:
+    def kernel(_key: tuple, g: pd.DataFrame) -> pd.DataFrame:
         lists = _decode_group(g, stats, p)
         by_tf: dict[tuple[str, int], dict] = {
             (lst["term"], lst["field"]): lst for lst in lists
@@ -1571,7 +1636,7 @@ def match_counts(
     hits = (postings.filter(F.col("term").isin(all_terms))
             .select("term", "segment", "docs_vb"))
 
-    def kernel(_key, g: pd.DataFrame) -> pd.DataFrame:
+    def kernel(_key: tuple, g: pd.DataFrame) -> pd.DataFrame:
         by_term: dict[str, np.ndarray] = {}
         for i in range(len(g)):
             ids = delta_decode(
@@ -1644,7 +1709,7 @@ def facet_counts(
             .select("term", "segment", "docs_vb")
             .join(flt, "segment"))
 
-    def kernel(_key, g: pd.DataFrame) -> pd.DataFrame:
+    def kernel(_key: tuple, g: pd.DataFrame) -> pd.DataFrame:
         vals = g["vals"].iloc[0]
         value_docs = [(r["value"],
                        delta_decode(varbyte_decode(r["docs_vb"])
@@ -1853,7 +1918,7 @@ def explain_scores(
     hits = postings.filter(F.col("segment").isin(segs)
                            & F.col("term").isin(all_terms))
 
-    def kernel(_key, g: pd.DataFrame) -> pd.DataFrame:
+    def kernel(_key: tuple, g: pd.DataFrame) -> pd.DataFrame:
         lists = _decode_group(g, stats, p)
         # tf values ride along for the breakdown (decode again is cheap
         # here — explain touches a handful of rows)

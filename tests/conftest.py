@@ -1,4 +1,5 @@
 import os
+import uuid
 
 import pytest
 
@@ -14,3 +15,16 @@ def spark():
                   shuffle_partitions=cpus)
     yield s
     s.stop()
+
+
+def jobs_of(sc, fn) -> list[int]:
+    """Run ``fn()`` under a fresh Spark job group and return the ids of
+    the jobs it ran."""
+    group = f"jobs-of-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, getattr(fn, "__name__", "jobs_of"))
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return list(sc.statusTracker().getJobIdsForGroup(group))

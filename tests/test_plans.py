@@ -12,6 +12,8 @@ from dlkp_spark.config import BM25Params, IndexConfig
 from dlkp_spark.corpus import generate_web_pages
 from dlkp_spark.index.build import build_index, load_postings, prepare_docs
 
+from conftest import jobs_of
+
 
 @pytest.fixture(scope="module")
 def index_dir(spark, tmp_path_factory):
@@ -101,21 +103,56 @@ def test_query_terms_are_a_pushed_scan_predicate(spark, query_table, entry):
 
 
 def test_single_query_job_budget(spark, index_dir):
-    """A 1-query batch_topk runs at most 3 Spark jobs once the listing
-    cache is warm: no job may exist just to ship the query terms."""
+    """A 1-query batch_topk runs exactly one Spark job once the listing
+    cache is warm: the small-query plan is one task with no exchange, and
+    no job exists just to ship the query terms."""
     from dlkp_spark.query.wand import batch_topk
 
     q = [(0, TERMS)]
     batch_topk(spark, index_dir, q, k=5).collect()  # warm the listing cache
-    sc = spark.sparkContext
-    sc.setJobGroup("job-budget", "1-query batch_topk")
-    try:
-        batch_topk(spark, index_dir, q, k=5).collect()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    jobs = sc.statusTracker().getJobIdsForGroup("job-budget")
-    assert len(jobs) <= 3, jobs
+    jobs = jobs_of(spark.sparkContext,
+                   lambda: batch_topk(spark, index_dir, q, k=5).collect())
+    assert len(jobs) == 1, jobs
+
+
+def test_small_query_plan_choice(spark, index_dir, monkeypatch):
+    """Under SINGLE_TASK_MAX_ROWS a query plans as one MapInPandas task
+    with no Exchange; with the cutoff at 0 the same call takes the
+    parallel plan: the per-segment FlatMapGroupsInPandas and the rank
+    Window, in more than one job."""
+    from dlkp_spark.query import wand
+
+    q = [(0, TERMS)]
+    small = plan_of(wand.batch_topk(spark, index_dir, q, k=5))
+    assert "MapInPandas" in small and "Exchange" not in small, small
+    assert "FlatMapGroupsInPandas" not in small and "Window" not in small
+
+    monkeypatch.setattr(wand, "SINGLE_TASK_MAX_ROWS", 0)
+    par = plan_of(wand.batch_topk(spark, index_dir, q, k=5))
+    assert "FlatMapGroupsInPandas" in par and "Window" in par, par
+    assert "Exchange" in par, par
+    jobs = jobs_of(spark.sparkContext,
+                   lambda: wand.batch_topk(spark, index_dir, q, k=5).collect())
+    assert len(jobs) > 1, jobs
+
+
+@pytest.mark.parametrize("entry", sorted(_segment_queries()))
+def test_segment_kernels_declare_their_eval_type(spark, query_table, entry,
+                                                 monkeypatch):
+    """Every segment-query entry point plans and runs without PySpark's
+    "Cannot infer the eval type from type hints" UserWarning: each
+    applyInPandas kernel annotates both parameters (or neither). The
+    one-task cutoff is 0 so batch_topk's callers reach their
+    applyInPandas kernel too."""
+    import warnings
+
+    from dlkp_spark.query import wand
+
+    monkeypatch.setattr(wand, "SINGLE_TASK_MAX_ROWS", 0)
+    t, d = query_table
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", UserWarning)
+        _segment_queries()[entry](spark, t, d).collect()
 
 
 def test_exact_bm25_broadcasts_query_side(spark):

@@ -85,10 +85,17 @@ def test_wand_path_bit_identical(spark, index_dir, oracle_results):
         assert_rank_identical(got, want, bit_exact=True)
 
 
-def test_batch_taat_path_bit_identical(spark, index_dir, oracle_results):
-    from dlkp_spark.query.wand import batch_topk
+@pytest.mark.parametrize("plan", ["single_task", "parallel"])
+def test_batch_taat_path_bit_identical(spark, index_dir, oracle_results,
+                                       monkeypatch, plan):
+    """Both batch_topk plans: the one-task plan this small fixture picks,
+    and the segment-parallel plan forced by a cutoff of 0."""
+    from dlkp_spark.query import wand
 
-    got_rows = batch_topk(spark, index_dir, QUERIES, BM25Params(), k=K).collect()
+    if plan == "parallel":
+        monkeypatch.setattr(wand, "SINGLE_TASK_MAX_ROWS", 0)
+    got_rows = wand.batch_topk(spark, index_dir, QUERIES, BM25Params(),
+                               k=K).collect()
     by_q = {}
     for r in got_rows:
         by_q.setdefault(r["query_id"], []).append((r["rank"], r["doc_id"], r["score"]))

@@ -135,6 +135,23 @@ def test_killed_writer_and_expiry(spark, tmp_path):
     assert before == after and len(before) > 0
 
 
+def test_read_postings_raises_when_segments_are_gone(spark, tmp_path):
+    """A retained snapshot whose segment data was deleted out from under
+    it raises FileNotFoundError (a typed error, not an assert that
+    ``python -O`` strips); other snapshots stay readable."""
+    import shutil
+
+    tdir = str(tmp_path / "tbl")
+    docs = prepare_docs(generate_web_pages(spark, 40, seed=7))
+    snap.commit_build(spark, docs, tdir, cfg=CFG, n_shards=1)
+    snap.commit_compact(spark, tdir, factor=2, cfg=CFG, n_shards=1)
+    shutil.rmtree(os.path.join(snap.index_dir_of(tdir, as_of=1), "segments"))
+    with pytest.raises(FileNotFoundError,
+                       match="snapshot 1 references segment data that is gone"):
+        snap.read_postings(spark, tdir, as_of=1)
+    assert snap.read_postings(spark, tdir).count() > 0
+
+
 def test_replayed_append_not_double_listed(spark, tmp_path):
     """A streaming retry recommits the SAME batch_id; the snapshot must
     list it once (read_postings would otherwise double-read the batch)."""
