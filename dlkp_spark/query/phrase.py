@@ -7,55 +7,42 @@ of the phrase's distinct terms (body field, no boost) — the same scoring
 the plain-SQL oracle computes over the same term set, restricted to docs
 whose space-joined token stream contains the phrase substring.
 
-Scale shape mirrors batch_topk: a phrase touches only its terms' posting
-rows (term scan predicate), work fans out per segment (all of a doc's postings
-live in its doc-range segment, so adjacency is decided segment-locally),
-and only top-k rows leave each kernel. Position blobs decode lazily per
-touched (term, segment) row — never the whole index.
+Scale shape is batch_topk's: both phrase queries run on the segment-query
+scaffold of ``wand.py`` (``_SegmentQuery``: the term scan predicate plus
+``field = BODY``, tombstones, the one-task or segment-parallel plan and
+the top-k merge). Adjacency is decided segment-locally — all of a doc's
+postings live in its doc-range segment — and only top-k rows leave each
+kernel. Position blobs decode lazily per touched (term, segment) row —
+never the whole index.
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dlkp_spark.config import FIELD_BODY, BM25Params
-from dlkp_spark.index.build import load_postings, load_stats
-from dlkp_spark.index.codec import decode_positions, decode_postings_batch
-from dlkp_spark.oracle import idf as idf_fn
+from dlkp_spark.index.codec import decode_positions
+from dlkp_spark.query.wand import (_decode_group, _expand_prefixes,
+                                   _SegmentQuery, _Side, _topk_rows)
 
 
 def _decode_positional_group(g: pd.DataFrame, stats: dict, p: BM25Params) -> dict:
     """One segment's body posting rows → {term: list-dict with positions}.
 
-    Reuses the batched doc/tf/dl decode; the pos blob decodes per row
-    (counts = the row's tf values). A term may legitimately have several
-    rows only across segments — within one (segment, field) it is unique,
-    so the dict maps term → one entry.
+    The batched doc/tf/dl decode and BM25 contributions are
+    ``_decode_group``'s; the pos blob decodes per row (counts = the row's
+    tf values). A term may legitimately have several rows only across
+    segments — within one (segment, field) it is unique, so the dict maps
+    term → one entry.
     """
-    docs_f, tfs_f, dls_f, counts = decode_postings_batch(
-        g["docs_vb"].tolist(), g["tfs_vb"].tolist(), g["dls_vb"].tolist())
-    offsets = np.concatenate(([0], np.cumsum(counts)))
-    dfv = g["df"].to_numpy()
-    terms = g["term"].to_numpy()
-    pos_bufs = g["pos_vb"].tolist()
-    avgdl = stats["avgdl"][FIELD_BODY]
     out = {}
-    for i in range(len(g)):
-        s, e = offsets[i], offsets[i + 1]
-        tfs = tfs_f[s:e]
-        tff = tfs.astype(np.float64)
-        dlf = dls_f[s:e].astype(np.float64)
-        tfn = (tff * (p.k1 + 1.0)) / (tff + p.k1 * (1.0 - p.b + p.b * dlf / avgdl))
-        pos = decode_positions(pos_bufs[i], tfs)
-        out[str(terms[i])] = {
-            "docs": docs_f[s:e],
-            "contribs": idf_fn(stats["n_docs"], int(dfv[i])) * tfn,
-            "pos": pos,
-            "pos_off": np.concatenate(([0], np.cumsum(tfs))),
-        }
+    for lst, pos_vb in zip(_decode_group(g, stats, p), g["pos_vb"]):
+        lst["pos"] = decode_positions(pos_vb, lst["tfs"])
+        lst["pos_off"] = np.concatenate(([0], np.cumsum(lst["tfs"])))
+        out[str(lst["term"])] = lst
     return out
 
 
@@ -121,6 +108,16 @@ def _unordered_window_hit(pos_lists: list[np.ndarray], max_span: int) -> bool:
     return False
 
 
+def _score(lookup: dict, uniq_terms: list[str], d: int) -> float:
+    """A matched doc's score: the BM25 sum over the phrase's distinct
+    terms in term-asc order (the oracle's float order)."""
+    score = 0.0
+    for t in uniq_terms:
+        e = lookup[t]
+        score += float(e["contribs"][int(np.searchsorted(e["docs"], d))])
+    return score
+
+
 def _phrase_matches(by_term: dict, phrase: list[str],
                     slop: int = 0,
                     in_order: bool = True) -> list[tuple[int, float]]:
@@ -164,13 +161,8 @@ def _phrase_matches(by_term: dict, phrase: list[str],
                     _doc_positions(e, int(np.searchsorted(e["docs"], d))))
             hit = _ordered_window_hit(pos_lists, max_span) if in_order \
                 else _unordered_window_hit(pos_lists, max_span)
-            if not hit:
-                continue
-            score = 0.0
-            for t in uniq_terms:
-                e = lookup[t]
-                score += float(e["contribs"][int(np.searchsorted(e["docs"], d))])
-            out.append((int(d), score))
+            if hit:
+                out.append((int(d), _score(lookup, uniq_terms, d)))
             continue
         run = None
         for i, t in enumerate(phrase):
@@ -181,13 +173,7 @@ def _phrase_matches(by_term: dict, phrase: list[str],
             if not len(run):
                 break
         else:
-            # score: BM25 sum over distinct terms in term-asc order (the
-            # oracle's float order)
-            score = 0.0
-            for t in uniq_terms:
-                e = lookup[t]
-                score += float(e["contribs"][int(np.searchsorted(e["docs"], d))])
-            out.append((int(d), score))
+            out.append((int(d), _score(lookup, uniq_terms, d)))
     return out
 
 
@@ -220,72 +206,40 @@ def phrase_prefix_topk(
     """
     p = p or BM25Params()
     k = k or p.k
-    stats_all = load_stats(index_dir)
-    if not stats_all.get("positions"):
+    sq = _SegmentQuery(spark, index_dir, postings)
+    if not sq.meta.get("positions"):
         raise ValueError(
             f"{index_dir} was built without positions — phrase_prefix_topk "
             "needs IndexConfig(positions=True)")
-    stats = {"n_docs": stats_all["n_docs"], "avgdl": stats_all["avgdl"]}
+    stats = sq.stats
     qmap = [(int(qid), [str(t) for t in terms]) for qid, terms in queries
             if terms]
     if not qmap:
-        return spark.createDataFrame(
-            [], "query_id long, rank int, doc_id long, score double")
-    if postings is None:
-        postings = load_postings(spark, index_dir)
-    prefixes = sorted({terms[-1] for _, terms in qmap})
-    cond = None
-    for pre in prefixes:
-        c = F.col("term").startswith(pre)
-        cond = c if cond is None else (cond | c)
-    vocab = [r["term"] for r in
-             (postings.filter(F.col("field") == FIELD_BODY).filter(cond)
-              .select("term").distinct().collect())]
-    expanded: dict[str, list[str]] = {
-        pre: sorted(t for t in vocab if t.startswith(pre))
-        for pre in prefixes}
-    for pre, terms in expanded.items():
-        if len(terms) > max_expansion:
-            raise ValueError(
-                f"phrase prefix '{pre}*' expands to {len(terms)} terms "
-                f"(> max_expansion={max_expansion}) — narrow the prefix "
-                "or raise the cap")
+        return sq.empty()
+    expanded = _expand_prefixes(
+        sq.postings.filter(F.col("field") == FIELD_BODY),
+        sorted({terms[-1] for _, terms in qmap}), max_expansion,
+        "phrase prefix")
     all_terms = sorted({t for _, terms in qmap for t in terms[:-1]}
                        | {t for ts in expanded.values() for t in ts})
     if not all_terms:
-        return spark.createDataFrame(
-            [], "query_id long, rank int, doc_id long, score double")
-    hits = postings.filter((F.col("field") == FIELD_BODY)
-                           & F.col("term").isin(all_terms))
+        return sq.empty()
 
-    def kernel(_key: tuple, g: pd.DataFrame) -> pd.DataFrame:
+    def best_completions(by_term: dict, terms: list[str]) -> list[tuple[int, float]]:
+        full, pre = terms[:-1], terms[-1]
+        best: dict[int, float] = {}
+        for e in expanded[pre]:
+            for d, s in _phrase_matches(by_term, full + [e], 0):
+                if d not in best or s > best[d]:
+                    best[d] = s
+        return sorted(best.items(), key=lambda ds: (-ds[1], ds[0]))[:k]
+
+    def kernel(g: pd.DataFrame, _side: _Side) -> pd.DataFrame:
         by_term = _decode_positional_group(g, stats, p)
-        qids, dids, scores = [], [], []
-        for qid, terms in qmap:
-            full, pre = terms[:-1], terms[-1]
-            best: dict[int, float] = {}
-            for e in expanded[pre]:
-                for d, s in _phrase_matches(by_term, full + [e], 0):
-                    if d not in best or s > best[d]:
-                        best[d] = s
-            top = sorted(best.items(), key=lambda ds: (-ds[1], ds[0]))[:k]
-            for d, s in top:
-                qids.append(qid)
-                dids.append(d)
-                scores.append(s)
-        return pd.DataFrame({
-            "query_id": pd.Series(qids, dtype="int64"),
-            "doc_id": pd.Series(dids, dtype="int64"),
-            "score": pd.Series(scores, dtype="float64"),
-        })
+        return _topk_rows((qid, best_completions(by_term, terms))
+                          for qid, terms in qmap)
 
-    partials = hits.groupBy("segment").applyInPandas(
-        kernel, "query_id long, doc_id long, score double")
-    w = Window.partitionBy("query_id").orderBy(F.col("score").desc(),
-                                               F.col("doc_id"))
-    return (partials.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "rank", "doc_id", "score"))
+    return sq.run(all_terms, kernel, k=k, where=F.col("field") == FIELD_BODY)
 
 
 def phrase_topk(
@@ -324,64 +278,29 @@ def phrase_topk(
     """
     p = p or BM25Params()
     k = k or p.k
-    stats_all = load_stats(index_dir)
-    if not stats_all.get("positions"):
+    sq = _SegmentQuery(spark, index_dir, postings)
+    if not sq.meta.get("positions"):
         raise ValueError(
             f"{index_dir} was built without positions — phrase_topk needs "
             "IndexConfig(positions=True)")
-    stats = {"n_docs": stats_all["n_docs"], "avgdl": stats_all["avgdl"]}
+    stats = sq.stats
     qmap = [(int(qid), [str(t) for t in terms]) for qid, terms in phrases]
     all_terms = sorted({t for _, terms in qmap for t in terms})
     if not all_terms:
-        return spark.createDataFrame(
-            [], "query_id long, rank int, doc_id long, score double")
-    if postings is None:
-        postings = load_postings(spark, index_dir)
-    hits = postings.filter((F.col("field") == FIELD_BODY)
-                           & F.col("term").isin(all_terms))
-    use_deletes = deletes is not None
-    if use_deletes:
-        seg_docs = int(stats_all.get("segment_docs") or 0)
-        if not seg_docs:
-            raise ValueError(f"{index_dir}: stats.json has no segment_docs — "
-                             "cannot map tombstones to segments")
-        seg_del = (deletes.select("doc_id").distinct()
-                   .groupBy((F.col("doc_id") / F.lit(seg_docs))
-                            .cast("long").alias("segment"))
-                   .agg(F.sort_array(F.collect_list("doc_id")).alias("del_ids")))
-        hits = hits.join(seg_del, "segment", "left")
+        return sq.empty()
 
-    def kernel(_key: tuple, g: pd.DataFrame) -> pd.DataFrame:
-        deleted = None
-        if use_deletes:
-            raw = g["del_ids"].iloc[0]
-            g = g.drop(columns=["del_ids"])
-            if raw is not None and len(raw):
-                deleted = np.asarray(raw, dtype=np.int64)
+    def live_top(by_term: dict, phrase: list[str],
+                 deleted: np.ndarray | None) -> list[tuple[int, float]]:
+        matches = _phrase_matches(by_term, phrase, slop, in_order)
+        if deleted is not None and matches:
+            dead = np.isin([d for d, _ in matches], deleted)
+            matches = [m for m, x in zip(matches, dead) if not x]
+        return sorted(matches, key=lambda ds: (-ds[1], ds[0]))[:k]
+
+    def kernel(g: pd.DataFrame, side: _Side) -> pd.DataFrame:
         by_term = _decode_positional_group(g, stats, p)
-        qids, dids, scores = [], [], []
-        for qid, phrase in qmap:
-            matches = _phrase_matches(by_term, phrase, slop, in_order)
-            if deleted is not None and matches:
-                ds = np.fromiter((d for d, _ in matches), dtype=np.int64)
-                idx = np.searchsorted(deleted, ds)
-                hit = (idx < len(deleted)) & (deleted[np.minimum(
-                    idx, len(deleted) - 1)] == ds)
-                matches = [m for m, dead in zip(matches, hit) if not dead]
-            top = sorted(matches, key=lambda ds: (-ds[1], ds[0]))[:k]
-            for d, s in top:
-                qids.append(qid)
-                dids.append(d)
-                scores.append(s)
-        return pd.DataFrame({
-            "query_id": pd.Series(qids, dtype="int64"),
-            "doc_id": pd.Series(dids, dtype="int64"),
-            "score": pd.Series(scores, dtype="float64"),
-        })
+        return _topk_rows((qid, live_top(by_term, phrase, side.deleted))
+                          for qid, phrase in qmap)
 
-    partials = hits.groupBy("segment").applyInPandas(
-        kernel, "query_id long, doc_id long, score double")
-    w = Window.partitionBy("query_id").orderBy(F.col("score").desc(), F.col("doc_id"))
-    return (partials.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "rank", "doc_id", "score"))
+    return sq.run(all_terms, kernel, k=k, where=F.col("field") == FIELD_BODY,
+                  deletes=deletes)

@@ -14,13 +14,18 @@ Determinism: scores accumulate per doc in (term asc, field asc) order with
 the same float64 expression order as the oracle (dlkp_spark.oracle), so
 top-k results are bit-identical, tie-broken (score desc, doc_id asc).
 
-Scale shape: a query touches only its terms' posting rows (an ``isin``
-predicate pushed into the scan). ``batch_topk`` picks one of two plans
-around the same per-segment kernel, from a bound on the posting rows the
+Scale shape: every index query — ``batch_topk`` and the expansions built
+on it, synonym / dismax / collapse top-k, match and facet counts, explain,
+and the phrase queries of ``phrase.py`` — runs on one scaffold,
+``_SegmentQuery``. It reads the stats, scans only the query terms'
+posting rows (an ``isin`` predicate pushed into the scan), joins the
+per-segment sidecars (attribute filter, attribute values, tombstones),
+picks the plan and merges; a kernel only turns one segment's posting rows
+into per-query rows. The plan comes from a bound on the posting rows the
 call can select (|terms| × 2 fields × ceil(n_docs / segment_docs), from
 stats, no Spark job). At or under ``SINGLE_TASK_MAX_ROWS`` the whole query
-runs as ONE task — ``coalesce(1).mapInPandas``, the task scores every
-segment and ranks — so an interactive query costs one job and no
+runs as ONE task — ``coalesce(1).mapInPandas``, the task runs the kernel
+on every segment and ranks — so an interactive query costs one job and no
 exchange. Above it, work parallelizes over segments — at 10^12 docs a
 single query fans out over n_docs/segment_docs segment tasks; the merge
 moves only k rows per segment.
@@ -29,14 +34,17 @@ moves only k rows per segment.
 from __future__ import annotations
 
 import heapq
-from collections.abc import Iterable, Iterator
+import re
+from collections.abc import Callable, Iterable, Iterator
+from functools import reduce
+from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from dlkp_spark.config import FIELD_KP, BM25Params
+from dlkp_spark.config import FIELD_BODY, FIELD_KP, BM25Params
 from dlkp_spark.index.build import load_attrs, load_postings, load_stats
 from dlkp_spark.index.codec import (decode_postings_batch, delta_decode,
                                     varbyte_decode)
@@ -67,9 +75,6 @@ class _List:
         """Move cursor to first doc >= target (galloping via searchsorted)."""
         if self.pos < self.n and self.docs[self.pos] < target:
             self.pos += int(np.searchsorted(self.docs[self.pos:], target, side="left"))
-
-    def block_idx(self, block_size: int) -> int:
-        return self.pos // block_size
 
     def block_ub(self, block_size: int) -> float:
         return self.boost * float(self.block_max[self.pos // block_size])
@@ -215,6 +220,11 @@ def merge_topk(partials: Iterable[tuple[int, float]], k: int) -> list[tuple[int,
     return sorted(partials, key=lambda t: (-t[1], t[0]))[:k]
 
 
+def _doc_ids(blob: bytes) -> np.ndarray:
+    """A varbyte + delta coded doc-id blob → its sorted int64 doc ids."""
+    return delta_decode(varbyte_decode(blob).astype(np.int64))
+
+
 def _decode_group(g: pd.DataFrame, stats: dict, p: BM25Params) -> list[dict]:
     """Decode every posting row of one group in ONE batched codec pass.
 
@@ -224,7 +234,8 @@ def _decode_group(g: pd.DataFrame, stats: dict, p: BM25Params) -> list[dict]:
     contributions are computed flat with per-row idf/avgdl repeated to
     posting granularity; per-element float expressions are unchanged, so
     per-list values stay bit-identical to row-at-a-time decode
-    (tests/test_codec.py pins both).
+    (tests/test_codec.py pins both). Each list carries its raw ``tfs``
+    and ``dls`` too (views of the same decode).
     """
     n = len(g)
     if n == 0:
@@ -252,6 +263,7 @@ def _decode_group(g: pd.DataFrame, stats: dict, p: BM25Params) -> list[dict]:
             "term": terms[i], "field": int(fields[i]),
             "boost": p.kp_boost if int(fields[i]) == FIELD_KP else 1.0,
             "docs": docs_f[s:e], "contribs": contribs_f[s:e],
+            "tfs": tfs_f[s:e], "dls": dls_f[s:e],
             "block_max": np.asarray(bmax[i], dtype=np.float64),
             "block_last": np.asarray(blast[i], dtype=np.int64),
         })
@@ -267,19 +279,25 @@ def wand_topk(
 ) -> DataFrame:
     """Top-k over the compressed index → (query_id, rank, doc_id, score).
 
-    Latency-oriented entry point; since r6 it executes on the shared
-    segment-grouped batch kernel (``batch_topk``): each (term, segment)
-    posting row ships and decodes ONCE per segment and every query scores
-    against the shared decoded lists with the per-query BMW/dense exact
-    kernels. The former per-(query, segment) grouping replicated and
-    re-decoded a posting row for every query touching its term and paid a
-    separate partial-merge window — measured 1.5 s → 0.9 s for the
-    20-query latency set (13 → ~22 q/s) with bit-identical results
-    (tests/test_rank_identity.py pins both paths to the same oracle).
-    For sub-query-latency services, ``wand_topk_treereduce`` remains the
-    single-query heap-merge path.
+    Latency-oriented entry point; it runs ``batch_topk``: each (term,
+    segment) posting row ships and decodes ONCE per segment and every query
+    scores against the shared decoded lists with the per-query BMW/dense
+    exact kernels (tests/test_rank_identity.py pins it to the oracle).
+    ``wand_topk_treereduce`` is the single-query treeReduce heap-merge path.
     """
     return batch_topk(spark, index_dir, queries, p, k)
+
+
+def _accumulate(lists: list[dict]) -> tuple[np.ndarray, np.ndarray]:
+    """(sorted unique docs, summed boost × contrib per doc) over one
+    query's lists; ``np.add.at`` adds in list order, so the caller's list
+    order is the float-add order."""
+    docs = np.concatenate([lst["docs"] for lst in lists])
+    contribs = np.concatenate([lst["boost"] * lst["contribs"] for lst in lists])
+    uniq, inv = np.unique(docs, return_inverse=True)
+    acc = np.zeros(len(uniq), dtype=np.float64)
+    np.add.at(acc, inv, contribs)
+    return uniq, acc
 
 
 def _taat_topk(lists: list[dict], k: int,
@@ -300,11 +318,7 @@ def _taat_topk(lists: list[dict], k: int,
     """
     if not lists:
         return []
-    docs = np.concatenate([lst["docs"] for lst in lists])
-    contribs = np.concatenate([lst["boost"] * lst["contribs"] for lst in lists])
-    uniq, inv = np.unique(docs, return_inverse=True)
-    acc = np.zeros(len(uniq), dtype=np.float64)
-    np.add.at(acc, inv, contribs)
+    uniq, acc = _accumulate(lists)
     if cursor is not None:
         s_a, d_a = cursor
         keep = (acc < s_a) | ((acc == s_a) & (uniq > d_a))
@@ -330,11 +344,7 @@ def _taat_conjunctive(q_lists: list[dict], need: int, k: int,
     """
     if not q_lists or need <= 0:
         return []
-    docs = np.concatenate([lst["docs"] for lst in q_lists])
-    contribs = np.concatenate([lst["boost"] * lst["contribs"] for lst in q_lists])
-    uniq, inv = np.unique(docs, return_inverse=True)
-    acc = np.zeros(len(uniq), dtype=np.float64)
-    np.add.at(acc, inv, contribs)
+    uniq, acc = _accumulate(q_lists)
     cnt = np.zeros(len(uniq), dtype=np.int32)
     i = 0
     while i < len(q_lists):
@@ -472,18 +482,13 @@ def _allowed_docs(flt_rows, filter_attrs: list[str]) -> np.ndarray:
     doc lists across a filter's values, intersection across attributes; an
     attribute with no row in this segment allows nothing.
     """
-    per_attr: dict[str, np.ndarray] = {}
+    per_attr: dict[str, list[np.ndarray]] = {}
     for r in flt_rows:
-        ids = delta_decode(varbyte_decode(r["docs_vb"]).astype(np.int64))
-        a = r["attr"]
-        per_attr[a] = np.union1d(per_attr[a], ids) if a in per_attr else ids
-    allowed: np.ndarray | None = None
-    for a in filter_attrs:
-        ids = per_attr.get(a)
-        if ids is None:
-            return np.empty(0, dtype=np.int64)
-        allowed = ids if allowed is None else np.intersect1d(allowed, ids)
-    return allowed if allowed is not None else np.empty(0, dtype=np.int64)
+        per_attr.setdefault(r["attr"], []).append(_doc_ids(r["docs_vb"]))
+    if not filter_attrs or not set(filter_attrs) <= set(per_attr):
+        return np.empty(0, dtype=np.int64)
+    return reduce(np.intersect1d,
+                  (reduce(np.union1d, per_attr[a]) for a in filter_attrs))
 
 
 def _mask_lists(lists: list[dict], masks: list[np.ndarray],
@@ -512,6 +517,9 @@ def _mask_lists(lists: list[dict], masks: list[np.ndarray],
             np.arange(1, nb + 1) * block_size - 1, len(docs) - 1)]
         new = dict(lst)
         new["docs"], new["contribs"] = docs, contribs
+        for key in ("tfs", "dls"):
+            if key in lst:
+                new[key] = lst[key][mask]
         new["block_max"] = bmax
         new["block_last"] = blast.astype(np.int64)
         out.append(new)
@@ -532,21 +540,20 @@ def _apply_doc_deletes(lists: list[dict], deleted: np.ndarray,
         lists, [~np.isin(lst["docs"], deleted) for lst in lists], block_size)
 
 
-def _make_batch_kernel(qmap, stats, p, k, block_size, scoped: bool,
+def _make_batch_kernel(qmap, stats, p, k, block_size,
                        dense_max_width: int = _DENSE_MAX_WIDTH,
                        conjunctive: bool = False,
                        min_match: int | None = None,
-                       filter_attrs: list[str] | None = None,
-                       use_deletes: bool = False,
                        qweights: dict | None = None,
                        after: dict | None = None,
                        must_not: dict | None = None):
-    """Per-segment applyInPandas kernel shared by the one-wave and
-    two-wave batch paths.
+    """Per-segment batch kernel, ``(g, side) → (query_id, doc_id, score)``,
+    shared by the one-wave and two-wave batch paths.
 
-    scoped=False scores EVERY query of ``qmap`` against the segment;
-    scoped=True reads the segment's surviving query-id list from the
-    joined ``qids`` column (two-wave pruning) and scores only those.
+    Scores EVERY query of ``qmap`` against the segment, or only the
+    segment's surviving query ids when the scaffold hands it a two-wave
+    ``side.qids`` list. The attribute filter and tombstones of ``side``
+    mask the decoded lists before any query scores.
 
     Adaptive width guard (ADVICE r4): the dense accumulator is only
     allocated when the segment's doc-id span fits ``_DENSE_MAX_WIDTH`` —
@@ -557,116 +564,129 @@ def _make_batch_kernel(qmap, stats, p, k, block_size, scoped: bool,
     exact and bit-identical (tests/test_wand_kernel.py).
     """
     qterms = dict(qmap)
+    gated = conjunctive or (min_match is not None and min_match > 1)
 
-    def kernel(_key: tuple, g: pd.DataFrame) -> pd.DataFrame:
-        if scoped:
-            live = [(int(q), qterms[int(q)]) for q in g["qids"].iloc[0]]
-            g = g.drop(columns=["qids"])
-        else:
-            live = qmap
-        allowed = None
-        if filter_attrs:
-            allowed = _allowed_docs(g["flt"].iloc[0], filter_attrs)
-            g = g.drop(columns=["flt"])
-        deleted = None
-        if use_deletes:
-            raw = g["del_ids"].iloc[0]
-            g = g.drop(columns=["del_ids"])
-            if raw is not None and len(raw):
-                deleted = np.asarray(raw, dtype=np.int64)
+    def kernel(g: pd.DataFrame, side: _Side) -> pd.DataFrame:
+        live = qmap if side.qids is None else \
+            [(q, qterms[q]) for q in side.qids]
         lists = [lst for lst in _decode_group(g, stats, p) if len(lst["docs"])]
-        if allowed is not None:
-            lists = _apply_doc_filter(lists, allowed, block_size)
-        if deleted is not None:
-            lists = _apply_doc_deletes(lists, deleted, block_size)
-        qids, dids, scores = [], [], []
-        if lists and live:
-            # dense-accumulator setup: segment doc ids live in a bounded
-            # contiguous range, so one reusable width-sized buffer serves
-            # every query (see _taat_topk_dense)
-            base = min(int(lst["docs"][0]) for lst in lists)
-            width = max(int(lst["docs"][-1]) for lst in lists) - base + 1
-            gated = conjunctive or (min_match is not None and min_match > 1)
-            dense = width <= dense_max_width and not gated
-            by_term: dict[str, list[dict]] = {}
-            for lst in sorted(lists, key=lambda d: (d["term"], d["field"])):
-                if dense:
-                    lst["cols"] = (lst["docs"] - base).astype(np.int64)
-                    lst["vals"] = lst["boost"] * lst["contribs"]
-                by_term.setdefault(lst["term"], []).append(lst)
-            acc = np.zeros(width, dtype=np.float64) if dense else None
-            for qid, terms in live:
-                if qweights:
-                    q_lists = []
-                    for t in terms:
-                        w = qweights.get((qid, t))
-                        for lst in by_term.get(t, []):
-                            q_lists.append(_weight_list(lst, w) if w else lst)
-                else:
-                    q_lists = [lst for t in terms for lst in by_term.get(t, [])]
-                if must_not and qid in must_not:
-                    # Boolean MUST_NOT: drop every posting of a doc that
-                    # contains any excluded term (either field) BEFORE
-                    # scoring — surviving docs keep bit-identical scores.
-                    # The mask copies lists, so the segment's shared
-                    # decoded lists are untouched for other queries; the
-                    # dense fast-path arrays are re-derived from the
-                    # masked copies (the cached ones index the full list).
-                    neg = [lst["docs"] for t in must_not[qid]
-                           for lst in by_term.get(t, [])]
-                    if neg:
-                        excl = np.unique(np.concatenate(neg))
-                        q_lists = _apply_doc_deletes(q_lists, excl,
-                                                     block_size)
-                        if dense:
-                            for lst in q_lists:
-                                lst["cols"] = (lst["docs"] - base).astype(np.int64)
-                                lst["vals"] = lst["boost"] * lst["contribs"]
-                cursor = after.get(qid) if after else None
-                # non-dense fallback: the per-query adaptive kernel, which
-                # may still go dense for a query whose own lists span a
-                # narrow doc range, else BMW — never a segment-width buffer
-                if gated:
-                    # qmap terms are deduped, so len(terms) is the
-                    # distinct-term requirement for AND; min_match clamps
-                    # to it (a 2-term query with min_match=3 needs both)
-                    need = len(terms) if conjunctive \
-                        else min(int(min_match), len(terms))
-                    top = _taat_conjunctive(q_lists, need, k, cursor)
-                elif dense:
-                    top = _taat_topk_dense(q_lists, acc, base, k, cursor)
-                elif cursor is not None:
-                    # searchAfter needs a post-score gate, which BMW's
-                    # heap can't express — the sparse exact TAAT applies
-                    # the cursor before selection (scores unchanged)
-                    top = _taat_topk(q_lists, k, cursor)
-                else:
-                    top = exact_topk_lists(q_lists, k, block_size,
-                                           dense_max_width)
-                for d, s in top:
-                    qids.append(qid)
-                    dids.append(d)
-                    scores.append(s)
-        return pd.DataFrame({
-            "query_id": pd.Series(qids, dtype="int64"),
-            "doc_id": pd.Series(dids, dtype="int64"),
-            "score": pd.Series(scores, dtype="float64"),
-        })
+        if side.allowed is not None:
+            lists = _apply_doc_filter(lists, side.allowed, block_size)
+        if side.deleted is not None:
+            lists = _apply_doc_deletes(lists, side.deleted, block_size)
+        if not lists or not live:
+            return _topk_rows([])
+        # dense-accumulator setup: segment doc ids live in a bounded
+        # contiguous range, so one reusable width-sized buffer serves
+        # every query (see _taat_topk_dense)
+        base = min(int(lst["docs"][0]) for lst in lists)
+        width = max(int(lst["docs"][-1]) for lst in lists) - base + 1
+        dense = width <= dense_max_width and not gated
+
+        def densify(lists: list[dict]) -> list[dict]:
+            for lst in lists if dense else ():
+                lst["cols"] = (lst["docs"] - base).astype(np.int64)
+                lst["vals"] = lst["boost"] * lst["contribs"]
+            return lists
+
+        by_term: dict[str, list[dict]] = {}
+        for lst in densify(sorted(lists, key=lambda d: (d["term"], d["field"]))):
+            by_term.setdefault(lst["term"], []).append(lst)
+        acc = np.zeros(width, dtype=np.float64) if dense else None
+
+        def score(qid, terms) -> list[tuple[int, float]]:
+            if qweights:
+                q_lists = []
+                for t in terms:
+                    w = qweights.get((qid, t))
+                    for lst in by_term.get(t, []):
+                        q_lists.append(_weight_list(lst, w) if w else lst)
+            else:
+                q_lists = [lst for t in terms for lst in by_term.get(t, [])]
+            if must_not and qid in must_not:
+                # Boolean MUST_NOT: drop every posting of a doc that
+                # contains any excluded term (either field) BEFORE
+                # scoring — surviving docs keep bit-identical scores.
+                # The mask copies lists, so the segment's shared
+                # decoded lists are untouched for other queries; the
+                # dense fast-path arrays are re-derived from the
+                # masked copies (the cached ones index the full list).
+                neg = [lst["docs"] for t in must_not[qid]
+                       for lst in by_term.get(t, [])]
+                if neg:
+                    excl = np.unique(np.concatenate(neg))
+                    q_lists = densify(_apply_doc_deletes(q_lists, excl, block_size))
+            cursor = after.get(qid) if after else None
+            # non-dense fallback: the per-query adaptive kernel, which
+            # may still go dense for a query whose own lists span a
+            # narrow doc range, else BMW — never a segment-width buffer
+            if gated:
+                # qmap terms are deduped, so len(terms) is the
+                # distinct-term requirement for AND; min_match clamps
+                # to it (a 2-term query with min_match=3 needs both)
+                need = len(terms) if conjunctive \
+                    else min(int(min_match), len(terms))
+                return _taat_conjunctive(q_lists, need, k, cursor)
+            if dense:
+                return _taat_topk_dense(q_lists, acc, base, k, cursor)
+            if cursor is not None:
+                # searchAfter needs a post-score gate, which BMW's
+                # heap can't express — the sparse exact TAAT applies
+                # the cursor before selection (scores unchanged)
+                return _taat_topk(q_lists, k, cursor)
+            return exact_topk_lists(q_lists, k, block_size, dense_max_width)
+
+        return _topk_rows((qid, score(qid, terms)) for qid, terms in live)
 
     return kernel
 
 
+def _topk_rows(tops: Iterable[tuple[int, list[tuple[int, float]]]]) -> pd.DataFrame:
+    """[(query_id, [(doc_id, score), ...]), ...] → a top-k kernel's
+    (query_id, doc_id, score) frame."""
+    qids, dids, scores = [], [], []
+    for qid, top in tops:
+        for d, s in top:
+            qids.append(qid)
+            dids.append(d)
+            scores.append(s)
+    return pd.DataFrame({
+        "query_id": pd.Series(qids, dtype="int64"),
+        "doc_id": pd.Series(dids, dtype="int64"),
+        "score": pd.Series(scores, dtype="float64"),
+    })
+
+
+def _frame(rows: list[tuple], schema: str) -> pd.DataFrame:
+    """A kernel's row tuples → its output frame, typed per the Spark DDL
+    ``schema`` (long / int / double / string columns)."""
+    cols = [c.split() for c in schema.split(",")]
+    dtypes = {"long": "int64", "int": "int32", "double": "float64", "string": "object"}
+    return pd.DataFrame.from_records(rows, columns=[n for n, _ in cols]).astype(
+        {n: dtypes[t] for n, t in cols})
+
+
+def _term_doc_ids(g: pd.DataFrame) -> dict[str, np.ndarray]:
+    """One segment's posting rows → {term: sorted ids of the docs holding
+    it in either field}; only the doc-id blobs decode."""
+    by_term: dict[str, np.ndarray] = {}
+    for t, blob in zip(g["term"], g["docs_vb"]):
+        ids = _doc_ids(blob)
+        prev = by_term.get(t)
+        by_term[t] = ids if prev is None else np.union1d(prev, ids)
+    return by_term
+
+
 def _scoped_partials(hits: DataFrame, pairs: DataFrame, kernel) -> DataFrame:
-    """Run the scoped batch kernel over exactly the (query, segment) pairs
+    """Run the batch kernel over exactly the (query, segment) pairs
     given: fold the pair set into a per-segment query-id list (metadata
     scale — one row per touched segment) and broadcast-join it onto the
     posting rows, so each posting row still ships/decodes once per segment
     and the kernel scores only that segment's surviving queries."""
     seg_queries = pairs.groupBy("segment").agg(
         F.array_sort(F.collect_list("query_id")).alias("qids"))
-    scoped = hits.join(F.broadcast(seg_queries), "segment")
-    return scoped.groupBy("segment").applyInPandas(
-        kernel, "query_id long, doc_id long, score double")
+    return _per_segment(hits.join(F.broadcast(seg_queries), "segment"),
+                        kernel, _PARTIAL)
 
 
 def _expand_range_filters(spark: SparkSession, index_dir: str,
@@ -714,13 +734,17 @@ def _segment_count(n_docs: int, segment_docs: int | None) -> int | None:
     return -(-int(n_docs) // int(segment_docs))
 
 
-# batch_topk runs a one-wave query as ONE task while the posting rows it
-# can select (bound: |terms| × 2 fields × segments) stay at or under this
-# many. The task decodes and scores every row serially, so past some size
-# the parallel plan's two extra stages pay for themselves: on a 4-core
-# host (local[4]) the plans crossed between 21k and 28k bound rows (sweep
-# in ROADMAP.md, direction 1), so the cutoff sits just under that.
+# A segment query runs as ONE task while the posting rows it can select
+# (bound: |terms| × 2 fields × segments) stay at or under this many. The
+# task decodes and scores every row serially, so past some size the
+# parallel plan's extra stages pay for themselves: on a 4-core host
+# (local[4]) the plans crossed between 21k and 28k bound rows (sweep in
+# ROADMAP.md, direction 1), so the cutoff sits just under that.
 SINGLE_TASK_MAX_ROWS = 20_000
+
+# kernel output of a top-k segment query; empty-result frame of a top-k call
+_PARTIAL = "query_id long, doc_id long, score double"
+_TOPK = "query_id long, rank int, doc_id long, score double"
 
 
 def _should_two_wave(n_docs: int, segment_docs: int | None,
@@ -743,29 +767,243 @@ def _should_two_wave(n_docs: int, segment_docs: int | None,
     return n_seg is not None and n_seg >= cutoff
 
 
-def _single_task_topk(hits: DataFrame, kernel, k: int) -> DataFrame:
-    """Run a small one-wave query in one task: the task concatenates its
-    Arrow batches, runs the per-segment batch kernel on each ``segment``
-    group, and ranks each query by (score desc, doc_id asc) itself — the
-    same rows the parallel plan's segment exchange + row_number window
-    give, with no Exchange and one Spark job."""
+class _Side(NamedTuple):
+    """One segment's sidecars, decoded before its kernel runs; None where
+    the query joined no such sidecar."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        parts = [b for b in batches if len(b)]
-        if not parts:
-            return
-        rows = pd.concat(parts, ignore_index=True)
-        top = pd.concat([kernel((seg,), g)
-                         for seg, g in rows.groupby("segment", sort=True)],
-                        ignore_index=True)
-        top = top.sort_values(["query_id", "score", "doc_id"],
-                              ascending=[True, False, True])
-        top["rank"] = (top.groupby("query_id").cumcount() + 1).astype("int32")
-        yield top[top["rank"] <= k][["query_id", "rank", "doc_id", "score"]]
+    allowed: np.ndarray | None = None   # doc ids passing the attr filter
+    values: list | None = None          # [(attr value, doc ids)] of one attr
+    deleted: np.ndarray | None = None   # tombstoned doc ids
+    qids: list | None = None            # two-wave: the query ids to score
 
-    # rank is NOT NULL, as row_number() makes it on the parallel plan
-    return hits.coalesce(1).mapInPandas(
-        run, "query_id long, rank int not null, doc_id long, score double")
+
+def _per_segment(hits: DataFrame, kernel, schema: str) -> DataFrame:
+    """The parallel plan: one kernel call per segment group."""
+    return hits.groupBy("segment").applyInPandas(kernel, schema)
+
+
+def _rank(partials: DataFrame, k: int, collapse: bool = False) -> DataFrame:
+    """The parallel plan's top-k merge: rank each query's kernel rows by
+    (score desc, doc_id asc) and keep k. ``collapse`` first keeps only
+    each (query, value)'s best row; NULL values form one partition (the
+    shared null group) in both Spark and the SQL oracle."""
+    order = (F.col("score").desc(), F.col("doc_id"))
+    cols = ["query_id", "rank", "doc_id", "score"]
+    if collapse:
+        wv = Window.partitionBy("query_id", "value").orderBy(*order)
+        partials = (partials.withColumn("rn", F.row_number().over(wv))
+                    .filter(F.col("rn") == 1).drop("rn"))
+        cols.append("value")
+    w = Window.partitionBy("query_id").orderBy(*order)
+    return (partials.withColumn("rank", F.row_number().over(w))
+            .filter(F.col("rank") <= k).select(*cols))
+
+
+def _rank_frame(top: pd.DataFrame, k: int, collapse: bool) -> pd.DataFrame:
+    """``_rank`` in pandas, for the one-task plan: the same rows and
+    order, with no Spark window."""
+    top = top.sort_values(["query_id", "score", "doc_id"],
+                          ascending=[True, False, True])
+    if collapse:
+        top = top.drop_duplicates(["query_id", "value"])
+    top["rank"] = (top.groupby("query_id").cumcount() + 1).astype("int32")
+    cols = ["query_id", "rank", "doc_id", "score"] + (["value"] if collapse else [])
+    return top[top["rank"] <= k][cols]
+
+
+class _SegmentQuery:
+    """The scaffold every segment query runs on: the index stats, the
+    empty-result frame, the posting scan (the query terms as one pushed
+    ``isin`` predicate, plus the caller's), the per-segment sidecars
+    (decoded into a ``_Side`` before each kernel call), the plan and the
+    merge. A kernel ``fn(g, side)`` only turns one segment's posting rows
+    into per-query rows; it must not capture the scaffold, which holds the
+    SparkSession.
+
+    Plan: |terms| × 2 fields × ceil(n_docs / segment_docs) bounds the
+    posting rows a call can select (stats only, no Spark job). At or
+    under ``SINGLE_TASK_MAX_ROWS`` the call runs as ONE task
+    (``coalesce(1).mapInPandas``, top-k rows ranked in pandas) — one job,
+    no exchange. Otherwise ``groupBy(segment).applyInPandas`` plus the
+    ``row_number`` window(s). Count and explain merges are Spark
+    aggregates on both plans. Both plans return identical rows and schema.
+    """
+
+    def __init__(self, spark: SparkSession, index_dir: str,
+                 postings: DataFrame | None = None):
+        self.spark, self.index_dir = spark, index_dir
+        self.meta = load_stats(index_dir)
+        self.stats = {"n_docs": self.meta["n_docs"], "avgdl": self.meta["avgdl"]}
+        self.block_size = self.meta.get("block_size", 64)
+        self._postings = postings
+
+    @property
+    def postings(self) -> DataFrame:
+        if self._postings is None:
+            self._postings = load_postings(self.spark, self.index_dir)
+        return self._postings
+
+    def empty(self, schema: str = _TOPK) -> DataFrame:
+        return self.spark.createDataFrame([], schema)
+
+    def require_attrs(self, attrs: Iterable[str]) -> None:
+        built = self.meta.get("attrs", [])
+        missing = set(attrs) - set(built)
+        if missing:
+            raise ValueError(
+                f"index at {self.index_dir} has no attribute postings for "
+                f"{sorted(missing)}; built with attrs={built} — rebuild "
+                "with build_index(..., attrs=(...))")
+
+    def scan(self, terms: list[str], fn, where=None, cols=None,
+             filters: dict | None = None, attr: str | None = None,
+             deletes: DataFrame | None = None) -> tuple[DataFrame, Callable]:
+        """(posting rows of ``terms`` with the sidecars joined, the
+        ``(key, g)`` kernel that decodes the sidecars and calls ``fn``).
+
+        ``filters`` joins the attribute-filter doc lists (inner: a segment
+        with no allowed doc drops before its kernel runs); ``attr`` joins
+        the attribute's per-value doc lists (left: a segment without the
+        attribute still ranks, in the null group); ``deletes`` joins the
+        tombstones (left)."""
+        cond = F.col("term").isin(terms)
+        hits = self.postings.filter(cond if where is None else where & cond)
+        if cols:
+            hits = hits.select(*cols)
+        attrs = load_attrs(self.spark, self.index_dir) if filters or attr else None
+        if filters:
+            fc = _any_of((F.col("attr") == a) & F.col("value").isin([str(v) for v in vals])
+                         for a, vals in filters.items())
+            # (attr, value) predicate pushes to the sidecar's parquet scan;
+            # one tiny row per (attr, segment) joins the posting groups
+            hits = hits.join(attrs.filter(fc).groupBy("segment").agg(
+                F.collect_list(F.struct("attr", "docs_vb")).alias("flt")),
+                "segment")
+        if attr is not None:
+            hits = hits.join(attrs.filter(F.col("attr") == attr).groupBy("segment").agg(
+                F.collect_list(F.struct("value", "docs_vb")).alias("vals")),
+                "segment", "left")
+        if deletes is not None:
+            seg_docs = int(self.meta.get("segment_docs") or 0)
+            if not seg_docs:
+                raise ValueError(f"{self.index_dir}: stats.json has no "
+                                 "segment_docs — cannot map tombstones to segments")
+            # per-segment sorted tombstone lists (bounded by segment_docs
+            # per row)
+            hits = hits.join(
+                deletes.select("doc_id").distinct()
+                .groupBy((F.col("doc_id") / F.lit(seg_docs)).cast("long").alias("segment"))
+                .agg(F.sort_array(F.collect_list("doc_id")).alias("del_ids")),
+                "segment", "left")
+        filter_attrs = sorted(filters) if filters else None
+
+        def kernel(_key: tuple, g: pd.DataFrame) -> pd.DataFrame:
+            side = {}
+            if "flt" in g:
+                side["allowed"] = _allowed_docs(g["flt"].iloc[0], filter_attrs)
+            if "vals" in g:
+                rows = g["vals"].iloc[0]
+                side["values"] = [(r["value"], _doc_ids(r["docs_vb"]))
+                                  for r in (rows if rows is not None else [])]
+            if "del_ids" in g:
+                raw = g["del_ids"].iloc[0]
+                if raw is not None and len(raw):
+                    side["deleted"] = np.asarray(raw, dtype=np.int64)
+            if "qids" in g:
+                side["qids"] = [int(q) for q in g["qids"].iloc[0]]
+            return fn(g.drop(columns=[c for c in ("flt", "vals", "del_ids", "qids")
+                                      if c in g]), _Side(**side))
+
+        return hits, kernel
+
+    def run(self, terms: list[str], fn, schema: str = _PARTIAL,
+            merge: str | Callable | None = "topk", k: int | None = None,
+            **scan_kw) -> DataFrame:
+        """Scan, plan and merge one segment query. ``merge``: "topk" /
+        "collapse" rank the kernel rows to k per query; a callable
+        (a Spark aggregate) applies to the kernel rows on both plans; None
+        returns the kernel rows."""
+        hits, kernel = self.scan(terms, fn, **scan_kw)
+        ranked = merge in ("topk", "collapse")
+        collapse = merge == "collapse"
+        n_seg = _segment_count(self.meta["n_docs"], self.meta.get("segment_docs"))
+        # 2 fields: one posting row per (term, field, segment)
+        if n_seg is not None and len(terms) * 2 * n_seg <= SINGLE_TASK_MAX_ROWS:
+            def one_task(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+                parts = [b for b in batches if len(b)]
+                if parts:
+                    rows = pd.concat(parts, ignore_index=True)
+                    out = pd.concat([kernel((seg,), g) for seg, g in
+                                     rows.groupby("segment", sort=True)],
+                                    ignore_index=True)
+                    yield _rank_frame(out, k, collapse) if ranked else out
+
+            # rank is NOT NULL, as row_number() makes it on the parallel plan
+            partials = hits.coalesce(1).mapInPandas(one_task, schema.replace(
+                "query_id long,", "query_id long, rank int not null,")
+                if ranked else schema)
+        elif ranked:
+            partials = _rank(_per_segment(hits, kernel, schema), k, collapse)
+        else:
+            partials = _per_segment(hits, kernel, schema)
+        return merge(partials) if callable(merge) else partials
+
+
+def _parse_queries(queries) -> tuple[list[tuple[int, list[str]]], dict]:
+    """(queries with boost syntax parsed and terms deduped + sorted,
+    {(qid, term): weight}) — see ``_parse_boosts``."""
+    queries, qweights = _parse_boosts(queries)
+    return [(qid, sorted(set(terms))) for qid, terms in queries], qweights
+
+
+def _bare_queries(queries) -> list[tuple[int, list[str]]]:
+    """Queries with any ``^boost`` suffix dropped, terms deduped + sorted —
+    for the entry points that take no query weights."""
+    return [(int(qid), sorted({t.partition("^")[0] for t in terms}))
+            for qid, terms in queries]
+
+
+def _two_wave_pairs(sq: _SegmentQuery, hits: DataFrame, kernel, qmap, qweights,
+                    p: BM25Params, k: int, wave1_segments: int,
+                    keep: Callable[[DataFrame], DataFrame]):
+    """Segment pruning's pair sets, shared by ``batch_topk(two_wave=True)``
+    and ``two_wave_pair_counts`` → (ub, w1_pairs, w1, w2_pairs): per
+    (query, segment) the admissible bound ``ub`` from posting METADATA
+    only (no blob is read) and its posting count ``np``; each query's
+    ``wave1_segments`` best-bound pairs and their kernel rows ``w1``; the
+    other pairs whose bound reaches the query's kth wave-1 score (all of
+    them with fewer than k wave-1 hits). ``keep`` (a persist) wraps ``ub``
+    and ``w1``, which are read more than once."""
+    pair_rows = [(qid, t, qweights.get((qid, t), 1.0))
+                 for qid, terms in qmap for t in terms]
+    qt_df = sq.spark.createDataFrame(pair_rows,
+                                     "query_id long, term string, qw double")
+    boost = F.when(F.col("field") == FIELD_KP, F.lit(p.kp_boost)).otherwise(F.lit(1.0))
+    # (max_contrib × boost) × qw — same grouping as the kernels' weighted
+    # contribution, and float multiply by a positive weight is monotone,
+    # so the bound stays admissible under query boosts
+    ub = keep(
+        sq.postings.select("term", "field", "segment", "max_contrib", "n_postings")
+        .join(F.broadcast(qt_df), "term")
+        .groupBy("query_id", "segment")
+        .agg(F.sum((F.col("max_contrib") * boost) * F.col("qw")).alias("ub"),
+             F.sum("n_postings").alias("np")))
+    uw = Window.partitionBy("query_id").orderBy(F.col("ub").desc(), F.col("segment"))
+    w1_pairs = (ub.withColumn("rn", F.row_number().over(uw))
+                .filter(F.col("rn") <= wave1_segments)
+                .select("query_id", "segment", "np"))
+    w1 = keep(_scoped_partials(hits, w1_pairs, kernel))
+    # exact per-query threshold: the kth wave-1 score
+    theta = (_rank(w1, k).filter(F.col("rank") == k)
+             .select("query_id", F.col("score").alias("theta")))
+    w2_pairs = (ub.join(w1_pairs.select("query_id", "segment")
+                        .withColumn("w1", F.lit(True)),
+                        ["query_id", "segment"], "left")
+                .filter(F.col("w1").isNull())
+                .join(theta, "query_id", "left")
+                .filter(F.col("theta").isNull() | (F.col("ub") >= F.col("theta")))
+                .select("query_id", "segment", "np"))
+    return ub, w1_pairs, w1, w2_pairs
 
 
 def batch_topk(
@@ -846,12 +1084,10 @@ def batch_topk(
     score, which dominates its gated score, so pruning stays
     admissible).
 
-    Unlike ``wand_topk`` (which replicates and re-decodes a posting row for
-    every query touching its term), this ships each (term, segment) posting
-    row exactly once, decodes it once, and scores every query against the
-    decoded lists with vectorized TAAT accumulation — the right trade at
-    batch sizes where most lists are shared between queries. Results are
-    bit-identical to wand_topk/oracle. Returns (query_id, rank, doc_id, score).
+    Each (term, segment) posting row ships and decodes exactly once, and
+    every query scores against the decoded lists with vectorized TAAT
+    accumulation. Results are bit-identical to the oracle. Returns
+    (query_id, rank, doc_id, score).
 
     two_wave=True enables SEGMENT PRUNING for selective queries — the
     100×-scale path: at 10^12 docs a query term may appear in 10^5
@@ -871,15 +1107,15 @@ def batch_topk(
     Query terms select posting rows through one ``isin`` predicate pushed
     into the parquet scan: no Spark job ships a term table to executors.
 
-    Plan choice (one-wave calls without ``filters``/``range_filters`` or
-    ``deletes``): when the selectable posting rows, bounded from stats by
-    |terms| × 2 fields × ceil(n_docs / segment_docs), are at most
-    ``SINGLE_TASK_MAX_ROWS``, the call runs as one task
-    (``coalesce(1).mapInPandas``: every segment through the same kernel,
-    then a per-query (score desc, doc_id asc) rank in the task) — one job,
-    no exchange. Otherwise, and for two-wave, filtered or delete-masked
-    calls, ``groupBy(segment).applyInPandas`` plus the ``row_number``
-    window. Both plans return identical rows.
+    Plan choice (every one-wave call, filtered and delete-masked ones
+    included — ``_SegmentQuery``): when the selectable posting rows,
+    bounded from stats by |terms| × 2 fields × ceil(n_docs /
+    segment_docs), are at most ``SINGLE_TASK_MAX_ROWS``, the call runs as
+    one task (``coalesce(1).mapInPandas``: every segment through the same
+    kernel, then a per-query (score desc, doc_id asc) rank in the task) —
+    one job, no exchange. Otherwise, and for two-wave calls,
+    ``groupBy(segment).applyInPandas`` plus the ``row_number`` window.
+    Both plans return identical rows.
 
     ``postings`` optionally reuses an already-loaded (possibly persisted)
     posting DataFrame — a long-running query service keeps the index hot
@@ -887,29 +1123,19 @@ def batch_topk(
     """
     p = p or BM25Params()
     k = k or p.k
-    stats_all = load_stats(index_dir)
-    stats = {"n_docs": stats_all["n_docs"], "avgdl": stats_all["avgdl"]}
-    block_size_meta = stats_all.get("block_size", 64)
+    sq = _SegmentQuery(spark, index_dir, postings)
     if two_wave == "auto":
-        two_wave = _should_two_wave(stats_all["n_docs"],
-                                    stats_all.get("segment_docs"),
-                                    auto_cutoff)
-    queries, qweights = _parse_boosts(queries)
-    qmap = [(qid, sorted(set(terms))) for qid, terms in queries]
+        two_wave = _should_two_wave(sq.meta["n_docs"],
+                                    sq.meta.get("segment_docs"), auto_cutoff)
+    qmap, qweights = _parse_queries(queries)
     must_not = {int(q): sorted(set(ts)) for q, ts in must_not.items() if ts} \
         if must_not else None
-    all_terms = sorted({t for _, terms in qmap for t in terms})
-    if must_not:
-        # excluded terms join the posting scan (their doc lists feed the
-        # per-query exclusion sets) but are never added to scoring terms
-        all_terms = sorted(set(all_terms)
-                           | {t for ts in must_not.values() for t in ts})
+    # excluded terms join the posting scan (their doc lists feed the
+    # per-query exclusion sets) but are never added to scoring terms
+    all_terms = sorted({t for _, terms in qmap for t in terms}
+                       | {t for ts in (must_not or {}).values() for t in ts})
     if not all_terms:
-        return spark.createDataFrame([], "query_id long, rank int, doc_id long, score double")
-
-    if postings is None:
-        postings = load_postings(spark, index_dir)
-    hits = postings.filter(F.col("term").isin(all_terms))
+        return sq.empty()
 
     if range_filters:
         overlap = set(range_filters) & set(filters or {})
@@ -917,128 +1143,33 @@ def batch_topk(
             raise ValueError(
                 f"attrs {sorted(overlap)} appear in both filters and "
                 "range_filters — pass one form per attribute")
-        missing_attrs = set(range_filters) - set(stats_all.get("attrs", []))
-        if missing_attrs:
-            raise ValueError(
-                f"index at {index_dir} has no attribute postings for "
-                f"{sorted(missing_attrs)}; built with "
-                f"attrs={stats_all.get('attrs', [])}")
+        sq.require_attrs(range_filters)
         expanded = _expand_range_filters(spark, index_dir, range_filters)
         if any(not v for v in expanded.values()):
             # some range matches no attribute value at all → no document
             # can satisfy the conjunction; skip the scan entirely
-            return spark.createDataFrame(
-                [], "query_id long, rank int, doc_id long, score double")
+            return sq.empty()
         filters = {**(filters or {}), **expanded}
-
-    filter_attrs = sorted(filters) if filters else None
     if filters:
-        built_with = set(stats_all.get("attrs", []))
-        missing = set(filter_attrs) - built_with
-        if missing:
-            raise ValueError(
-                f"index at {index_dir} has no attribute postings for "
-                f"{sorted(missing)}; built with attrs={sorted(built_with)} — "
-                f"rebuild with build_index(..., attrs=(...))")
-        cond = None
-        for a, vals in filters.items():
-            c = (F.col("attr") == a) & F.col("value").isin([str(v) for v in vals])
-            cond = c if cond is None else (cond | c)
-        # (attr, value) predicate pushes to the sidecar's parquet scan;
-        # one tiny row per (attr, segment) joins the posting groups, so a
-        # segment with NO allowed docs drops before its kernel ever runs
-        flt = (load_attrs(spark, index_dir).filter(cond)
-               .groupBy("segment")
-               .agg(F.collect_list(F.struct("attr", "docs_vb")).alias("flt")))
-        hits = hits.join(flt, "segment")
+        sq.require_attrs(filters)
 
-    use_deletes = deletes is not None
-    if use_deletes:
-        seg_docs = int(stats_all.get("segment_docs") or 0)
-        if not seg_docs:
-            raise ValueError(f"{index_dir}: stats.json has no segment_docs — "
-                             "cannot map tombstones to segments")
-        # per-segment sorted tombstone lists (bounded by segment_docs per
-        # row); LEFT join — segments without deletes keep every posting
-        seg_del = (deletes.select("doc_id").distinct()
-                   .groupBy((F.col("doc_id") / F.lit(seg_docs))
-                            .cast("long").alias("segment"))
-                   .agg(F.sort_array(F.collect_list("doc_id")).alias("del_ids")))
-        hits = hits.join(seg_del, "segment", "left")
-
-    w = Window.partitionBy("query_id").orderBy(F.col("score").desc(), F.col("doc_id"))
     after = {int(q): (float(s), int(d)) for q, (s, d) in after.items()} \
         if after else None
+    fn = _make_batch_kernel(qmap, sq.stats, p, k, sq.block_size,
+                            conjunctive=conjunctive, min_match=min_match,
+                            qweights=qweights, after=after, must_not=must_not)
     if not two_wave:
-        kernel = _make_batch_kernel(qmap, stats, p, k, block_size_meta, scoped=False,
-                                    conjunctive=conjunctive, min_match=min_match,
-                                    filter_attrs=filter_attrs,
-                                    use_deletes=use_deletes, qweights=qweights,
-                                    after=after, must_not=must_not)
-        n_seg = _segment_count(stats_all["n_docs"],
-                               stats_all.get("segment_docs"))
-        # 2 fields: one posting row per (term, field, segment)
-        if not filters and not use_deletes and n_seg is not None \
-                and len(all_terms) * 2 * n_seg <= SINGLE_TASK_MAX_ROWS:
-            return _single_task_topk(hits, kernel, k)
-        partials = hits.groupBy("segment").applyInPandas(
-            kernel, "query_id long, doc_id long, score double")
-        return (partials.withColumn("rank", F.row_number().over(w))
-                .filter(F.col("rank") <= k)
-                .select("query_id", "rank", "doc_id", "score"))
+        return sq.run(all_terms, fn, k=k, filters=filters, deletes=deletes)
 
-    kernel = _make_batch_kernel(qmap, stats, p, k, block_size_meta, scoped=True,
-                                conjunctive=conjunctive, min_match=min_match,
-                                filter_attrs=filter_attrs,
-                                use_deletes=use_deletes, qweights=qweights,
-                                after=after, must_not=must_not)
-    # per-(query, segment) admissible upper bound from posting METADATA
-    # columns only (max_contrib is written at encode time) — this scan
-    # reads no posting blobs (parquet column pruning) and aggregates to
-    # one row per (query, touched segment)
-    pair_rows = [(qid, t, qweights.get((qid, t), 1.0))
-                 for qid, terms in qmap for t in terms]
-    qt_df = spark.createDataFrame(pair_rows,
-                                  "query_id long, term string, qw double")
-    boost = F.when(F.col("field") == FIELD_KP, F.lit(p.kp_boost)).otherwise(F.lit(1.0))
-    # (max_contrib × boost) × qw — same grouping as the kernels' weighted
-    # contribution, and float multiply by a positive weight is monotone,
-    # so the bound stays admissible under query boosts
-    # registry persists (r6): the former local persist + try/finally
-    # unpersist forced an EAGER localCheckpoint of the final frame (a full
-    # extra materialization pass) just so the intermediates could be
-    # released before returning. Routing them through the session cache
-    # registry keeps the result lazy — callers/benches release storage via
-    # release_cached() / catalog.clearCache() as with every other
-    # operator-internal persist.
+    hits, kernel = sq.scan(all_terms, fn, filters=filters, deletes=deletes)
+    # registry persists keep the result lazy (a local persist + unpersist
+    # would force an eager materialization first); callers release them
+    # via release_cached() / catalog.clearCache()
     from dlkp_spark.cache import persist as _registry_persist
 
-    ub = _registry_persist(
-        postings.select("term", "field", "segment", "max_contrib")
-        .join(F.broadcast(qt_df), "term")
-        .groupBy("query_id", "segment")
-        .agg(F.sum((F.col("max_contrib") * boost) * F.col("qw")).alias("ub")))
-    uw = Window.partitionBy("query_id").orderBy(F.col("ub").desc(), F.col("segment"))
-    w1_pairs = (ub.withColumn("rn", F.row_number().over(uw))
-                .filter(F.col("rn") <= wave1_segments)
-                .select("query_id", "segment"))
-    w1 = _registry_persist(_scoped_partials(hits, w1_pairs, kernel))
-    # exact per-query threshold: the kth wave-1 score (queries with
-    # fewer than k wave-1 hits have no row → no pruning for them)
-    theta = (w1.withColumn("rn", F.row_number().over(w))
-             .filter(F.col("rn") == k)
-             .select("query_id", F.col("score").alias("theta")))
-    w2_pairs = (ub.join(w1_pairs.withColumn("w1", F.lit(True)),
-                        ["query_id", "segment"], "left")
-                .filter(F.col("w1").isNull())
-                .join(theta, "query_id", "left")
-                .filter(F.col("theta").isNull() | (F.col("ub") >= F.col("theta")))
-                .select("query_id", "segment"))
-    w2 = _scoped_partials(hits, w2_pairs, kernel)
-    partials = w1.unionByName(w2)
-    return (partials.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "rank", "doc_id", "score"))
+    _, _, w1, w2_pairs = _two_wave_pairs(sq, hits, kernel, qmap, qweights, p,
+                                         k, wave1_segments, _registry_persist)
+    return _rank(w1.unionByName(_scoped_partials(hits, w2_pairs, kernel)), k)
 
 
 def prefix_topk(
@@ -1071,25 +1202,44 @@ def prefix_topk(
         postings = load_postings(spark, index_dir)
     prefixes = sorted({pre for _, pre in qmap})
     if not prefixes:
-        return spark.createDataFrame(
-            [], "query_id long, rank int, doc_id long, score double")
-    cond = None
-    for pre in prefixes:
-        c = F.col("term").startswith(pre)
-        cond = c if cond is None else (cond | c)
-    vocab = [r["term"] for r in
-             postings.filter(cond).select("term").distinct().collect()]
-    expanded: dict[str, list[str]] = {
-        pre: sorted(t for t in vocab if t.startswith(pre)) for pre in prefixes}
-    for pre, terms in expanded.items():
-        if len(terms) > max_expansion:
-            raise ValueError(
-                f"prefix '{pre}*' expands to {len(terms)} terms "
-                f"(> max_expansion={max_expansion}) — narrow the prefix "
-                "or raise the cap")
+        return spark.createDataFrame([], _TOPK)
+    expanded = _expand_prefixes(postings, prefixes, max_expansion)
     term_queries = [(qid, expanded[pre]) for qid, pre in qmap]
     return batch_topk(spark, index_dir, term_queries, p, k=k,
                       postings=postings, **topk_kw)
+
+
+def _any_of(conds: Iterable[Column]) -> Column:
+    """The OR of Spark conditions (an expansion's pushed scan predicate)."""
+    return reduce(lambda a, b: a | b, conds)
+
+
+def _check_expansion(what: str, terms: list[str], max_expansion: int,
+                     hint: str) -> None:
+    """Lucene's maxClauseCount guard: raise when an expansion matches more
+    than ``max_expansion`` index terms, instead of shipping an unbounded
+    term list to every kernel."""
+    if len(terms) > max_expansion:
+        raise ValueError(
+            f"{what} expands to {len(terms)} terms "
+            f"(> max_expansion={max_expansion}) — {hint} or raise the cap")
+
+
+def _expand_prefixes(postings: DataFrame, prefixes: list[str],
+                     max_expansion: int, what: str = "prefix"
+                     ) -> dict[str, list[str]]:
+    """{prefix: the sorted index terms starting with it}, from one distinct
+    projection over posting-row metadata (no blob decodes; the StartsWith
+    predicate reaches the parquet scan)."""
+    vocab = [r["term"] for r in
+             postings.filter(_any_of(F.col("term").startswith(pre) for pre in prefixes))
+             .select("term").distinct().collect()]
+    expanded = {pre: sorted(t for t in vocab if t.startswith(pre))
+                for pre in prefixes}
+    for pre, terms in expanded.items():
+        _check_expansion(f"{what} '{pre}*'", terms, max_expansion,
+                         "narrow the prefix")
+    return expanded
 
 
 def _wildcard_regex(pattern: str) -> str:
@@ -1097,8 +1247,6 @@ def _wildcard_regex(pattern: str) -> str:
     char) to an anchored regex understood identically by Spark's rlike
     and DuckDB's regexp_full_match — all other chars are escaped
     literally."""
-    import re as _re
-
     out = []
     for ch in pattern:
         if ch == "*":
@@ -1106,7 +1254,7 @@ def _wildcard_regex(pattern: str) -> str:
         elif ch == "?":
             out.append(".")
         else:
-            out.append(_re.escape(ch))
+            out.append(re.escape(ch))
     return "".join(out)
 
 
@@ -1137,40 +1285,29 @@ def wildcard_topk(
     qmap = [(int(qid), str(pat)) for qid, pat in queries]
     pats = sorted({pat for _, pat in qmap})
     if not pats:
-        return spark.createDataFrame(
-            [], "query_id long, rank int, doc_id long, score double")
+        return spark.createDataFrame([], _TOPK)
     if postings is None:
         postings = load_postings(spark, index_dir)
     vocab = postings.select("term").distinct()
     # literal prefix (chars before the first wildcard) prunes the scan
-    pre_cond = None
-    for pat in pats:
-        cut = min([i for i, c in enumerate(pat) if c in "*?"] + [len(pat)])
-        c = F.col("term").startswith(pat[:cut]) if cut else F.lit(True)
-        pre_cond = c if pre_cond is None else (pre_cond | c)
-    rx_cond = None
-    for pat in pats:
-        c = F.col("term").rlike(f"^{_wildcard_regex(pat)}$")
-        rx_cond = c if rx_cond is None else (rx_cond | c)
+    cuts = [min([i for i, c in enumerate(pat) if c in "*?"] + [len(pat)])
+            for pat in pats]
+    pre_cond = _any_of(F.col("term").startswith(pat[:cut]) if cut else F.lit(True)
+                       for pat, cut in zip(pats, cuts))
+    rx_cond = _any_of(F.col("term").rlike(f"^{_wildcard_regex(pat)}$")
+                      for pat in pats)
     matched = [r["term"] for r in
                vocab.filter(pre_cond & rx_cond).collect()]
-    import re as _re
-
     expanded: dict[str, list[str]] = {}
     for pat in pats:
-        rx = _re.compile(f"^{_wildcard_regex(pat)}$")
-        terms = sorted(t for t in matched if rx.match(t))
-        if len(terms) > max_expansion:
-            raise ValueError(
-                f"wildcard '{pat}' expands to {len(terms)} terms "
-                f"(> max_expansion={max_expansion}) — narrow the pattern "
-                "or raise the cap")
-        expanded[pat] = terms
+        rx = re.compile(f"^{_wildcard_regex(pat)}$")
+        expanded[pat] = sorted(t for t in matched if rx.match(t))
+        _check_expansion(f"wildcard '{pat}'", expanded[pat], max_expansion,
+                         "narrow the pattern")
     term_queries = [(qid, expanded[pat]) for qid, pat in qmap
                     if expanded[pat]]
     if not term_queries:
-        return spark.createDataFrame(
-            [], "query_id long, rank int, doc_id long, score double")
+        return spark.createDataFrame([], _TOPK)
     return batch_topk(spark, index_dir, term_queries, p, k=k,
                       postings=postings, **topk_kw)
 
@@ -1200,30 +1337,21 @@ def synonym_topk(
     The segment kernel merges member doc lists with one unique+scatter
     pass per (clause, field) and accumulates clause contributions in
     (clause index, field) order; docs are segment-disjoint so the global
-    top-k is the usual window merge. → (query_id, rank, doc_id, score).
+    top-k is the usual segment-query merge. → (query_id, rank, doc_id,
+    score).
     """
-    from dlkp_spark.config import FIELD_BODY
-
     p = p or BM25Params()
     k = k or p.k
-    stats_all = load_stats(index_dir)
-    stats = {"n_docs": stats_all["n_docs"], "avgdl": stats_all["avgdl"]}
-    qmap: list[tuple[int, list[tuple[str, ...]]]] = []
-    for qid, clauses in queries:
-        norm = []
-        for cl in clauses:
-            members = (cl,) if isinstance(cl, str) else tuple(sorted(set(cl)))
-            norm.append(members)
-        qmap.append((int(qid), norm))
+    sq = _SegmentQuery(spark, index_dir, postings)
+    stats = sq.stats
+    qmap = [(int(qid), [(cl,) if isinstance(cl, str) else tuple(sorted(set(cl)))
+                        for cl in clauses]) for qid, clauses in queries]
     all_terms = sorted({t for _, cls in qmap for cl in cls for t in cl})
     if not all_terms:
-        return spark.createDataFrame(
-            [], "query_id long, rank int, doc_id long, score double")
-    if postings is None:
-        postings = load_postings(spark, index_dir)
-    hits = postings.filter(F.col("term").isin(all_terms))
+        return sq.empty()
     # global per-(term, field) df from metadata — tiny (|terms| × 2 rows)
-    df_rows = hits.select("term", "field", "df").distinct().collect()
+    df_rows = (sq.postings.filter(F.col("term").isin(all_terms))
+               .select("term", "field", "df").distinct().collect())
     term_df = {(r["term"], int(r["field"])): int(r["df"]) for r in df_rows}
     fields = sorted({int(r["field"]) for r in df_rows}) or [FIELD_BODY]
     # df_max per (clause, field), resolved once for the whole index
@@ -1235,17 +1363,11 @@ def synonym_topk(
                 if dfs:
                     clause_df[(cl, f)] = max(dfs)
 
-    def kernel(_key: tuple, g: pd.DataFrame) -> pd.DataFrame:
-        docs_f, tfs_f, dls_f, counts = decode_postings_batch(
-            g["docs_vb"].tolist(), g["tfs_vb"].tolist(), g["dls_vb"].tolist())
-        offsets = np.concatenate(([0], np.cumsum(counts)))
-        entries: dict[tuple[str, int], tuple] = {}
-        for i in range(len(g)):
-            s, e = offsets[i], offsets[i + 1]
-            entries[(g["term"].iloc[i], int(g["field"].iloc[i]))] = (
-                docs_f[s:e], tfs_f[s:e], dls_f[s:e])
-        qids, dids, scores = [], [], []
-        for qid, cls in qmap:
+    def kernel(g: pd.DataFrame, _side: _Side) -> pd.DataFrame:
+        entries = {(lst["term"], lst["field"]): (lst["docs"], lst["tfs"], lst["dls"])
+                   for lst in _decode_group(g, stats, p)}
+
+        def clause_lists(cls) -> list[dict]:
             q_lists = []
             for cl in cls:  # clause order = query order (deterministic)
                 for f in fields:
@@ -1275,23 +1397,12 @@ def synonym_topk(
                         "docs": u, "contribs": idf * tfn,
                         "boost": p.kp_boost if f == FIELD_KP else 1.0,
                     })
-            for d, s in _taat_topk_lists_presorted(q_lists, k):
-                qids.append(qid)
-                dids.append(d)
-                scores.append(s)
-        return pd.DataFrame({
-            "query_id": pd.Series(qids, dtype="int64"),
-            "doc_id": pd.Series(dids, dtype="int64"),
-            "score": pd.Series(scores, dtype="float64"),
-        })
+            return q_lists
 
-    partials = hits.groupBy("segment").applyInPandas(
-        kernel, "query_id long, doc_id long, score double")
-    w = Window.partitionBy("query_id").orderBy(F.col("score").desc(),
-                                               F.col("doc_id"))
-    return (partials.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "rank", "doc_id", "score"))
+        return _topk_rows((qid, _taat_topk(clause_lists(cls), k))
+                          for qid, cls in qmap)
+
+    return sq.run(all_terms, kernel, k=k)
 
 
 def collapse_topk(
@@ -1316,67 +1427,37 @@ def collapse_topk(
     for exactness: if a value's best doc is outranked by k other values'
     bests within its own segment, those same k values outrank it
     globally, so it can never reach the global top-k. The global merge
-    is a two-window pass over ≤ k rows per (query, segment): best per
-    (query, value), then rank. Requires ``build_index(..., attrs=(...,
+    keeps the best row per (query, value), then ranks — over ≤ k rows
+    per (query, segment). Requires ``build_index(..., attrs=(...,
     attr, ...))``.
     """
     p = p or BM25Params()
     k = k or p.k
-    stats_all = load_stats(index_dir)
-    if attr not in stats_all.get("attrs", []):
-        raise ValueError(
-            f"index at {index_dir} has no attribute postings for '{attr}'; "
-            f"built with attrs={stats_all.get('attrs', [])}")
-    stats = {"n_docs": stats_all["n_docs"], "avgdl": stats_all["avgdl"]}
-    qmap = [(int(qid), sorted({t.partition("^")[0] for t in terms}))
-            for qid, terms in queries]
+    sq = _SegmentQuery(spark, index_dir, postings)
+    sq.require_attrs([attr])
+    stats = sq.stats
+    qmap = _bare_queries(queries)
     all_terms = sorted({t for _, terms in qmap for t in terms})
-    schema = "query_id long, doc_id long, score double, value string"
     if not all_terms:
-        return spark.createDataFrame(
-            [], "query_id long, rank int, doc_id long, score double, value string")
-    if postings is None:
-        postings = load_postings(spark, index_dir)
-    vals = (load_attrs(spark, index_dir).filter(F.col("attr") == attr)
-            .groupBy("segment")
-            .agg(F.collect_list(F.struct("value", "docs_vb")).alias("vals")))
-    # LEFT join (r6 fix, ADVICE): an inner join dropped every posting of a
-    # segment with zero docs carrying the attribute, so that segment's
-    # docs could never rank — ES null-bucket semantics say they compete in
-    # the shared null group, exactly like per-doc missing values
-    hits = (postings.filter(F.col("term").isin(all_terms))
-            .join(vals, "segment", "left"))
+        return sq.empty(_TOPK + ", value string")
 
-    def kernel(_key: tuple, g: pd.DataFrame) -> pd.DataFrame:
-        vrow = g["vals"].iloc[0]
-        value_docs = [(r["value"],
-                       delta_decode(varbyte_decode(r["docs_vb"])
-                                    .astype(np.int64)))
-                      for r in (vrow if vrow is not None else [])]
-        g = g.drop(columns=["vals"])
+    def kernel(g: pd.DataFrame, side: _Side) -> pd.DataFrame:
+        value_docs = side.values
         lists = [lst for lst in _decode_group(g, stats, p)
                  if len(lst["docs"])]
         by_term: dict[str, list[dict]] = {}
         for lst in sorted(lists, key=lambda d: (d["term"], d["field"])):
             by_term.setdefault(lst["term"], []).append(lst)
-        qids, dids, scores, values = [], [], [], []
+        rows = []
         for qid, terms in qmap:
             q_lists = [lst for t in terms for lst in by_term.get(t, [])]
             if not q_lists:
                 continue
-            docs = np.concatenate([lst["docs"] for lst in q_lists])
-            contribs = np.concatenate(
-                [lst["boost"] * lst["contribs"] for lst in q_lists])
-            uniq, inv = np.unique(docs, return_inverse=True)
-            acc = np.zeros(len(uniq), dtype=np.float64)
-            np.add.at(acc, inv, contribs)
+            uniq, acc = _accumulate(q_lists)
             # doc → value-code; unmatched docs share the null group (-1)
             group = np.full(len(uniq), -1, dtype=np.int64)
             for vi, (_v, ids) in enumerate(value_docs):
-                pos = np.searchsorted(ids, uniq)
-                hit = (pos < len(ids)) & \
-                    (ids[np.minimum(pos, len(ids) - 1)] == uniq)
-                group[hit] = vi
+                group[np.isin(uniq, ids, assume_unique=True)] = vi
             order = np.lexsort((uniq, -acc))
             seen: set[int] = set()
             for i in order:
@@ -1384,31 +1465,14 @@ def collapse_topk(
                 if gcode in seen:
                     continue
                 seen.add(gcode)
-                qids.append(qid)
-                dids.append(int(uniq[i]))
-                scores.append(float(acc[i]))
-                values.append(value_docs[gcode][0] if gcode >= 0 else None)
+                rows.append((qid, int(uniq[i]), float(acc[i]),
+                             value_docs[gcode][0] if gcode >= 0 else None))
                 if len(seen) >= k:
                     break
-        return pd.DataFrame({
-            "query_id": pd.Series(qids, dtype="int64"),
-            "doc_id": pd.Series(dids, dtype="int64"),
-            "score": pd.Series(scores, dtype="float64"),
-            "value": pd.Series(values, dtype="object"),
-        })
+        return _frame(rows, schema)
 
-    partials = hits.groupBy("segment").applyInPandas(kernel, schema)
-    # best per (query, value) across segments — NULL values form one
-    # partition (the shared null group) in both Spark and the SQL oracle
-    wv = Window.partitionBy("query_id", "value").orderBy(
-        F.col("score").desc(), F.col("doc_id"))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("doc_id"))
-    return (partials.withColumn("rn", F.row_number().over(wv))
-            .filter(F.col("rn") == 1).drop("rn")
-            .withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "rank", "doc_id", "score", "value"))
+    schema = _PARTIAL + ", value string"
+    return sq.run(all_terms, kernel, schema, merge="collapse", k=k, attr=attr)
 
 
 def dismax_topk(
@@ -1436,84 +1500,45 @@ def dismax_topk(
     is one union+scatter pass per (term, doc-overlap), and only k rows
     per (query, segment) leave the kernel.
     """
-    from dlkp_spark.config import FIELD_BODY
-
     p = p or BM25Params()
     k = k or p.k
     if not 0.0 <= tie <= 1.0:
         raise ValueError(f"tie must be in [0, 1], got {tie}")
-    stats_all = load_stats(index_dir)
-    stats = {"n_docs": stats_all["n_docs"], "avgdl": stats_all["avgdl"]}
-    qmap = [(int(qid), sorted({t.partition("^")[0] for t in terms}))
-            for qid, terms in queries]
+    sq = _SegmentQuery(spark, index_dir, postings)
+    stats = sq.stats
+    qmap = _bare_queries(queries)
     all_terms = sorted({t for _, terms in qmap for t in terms})
     if not all_terms:
-        return spark.createDataFrame(
-            [], "query_id long, rank int, doc_id long, score double")
-    if postings is None:
-        postings = load_postings(spark, index_dir)
-    hits = postings.filter(F.col("term").isin(all_terms))
+        return sq.empty()
 
-    def kernel(_key: tuple, g: pd.DataFrame) -> pd.DataFrame:
-        lists = _decode_group(g, stats, p)
+    def kernel(g: pd.DataFrame, _side: _Side) -> pd.DataFrame:
         by_tf: dict[tuple[str, int], dict] = {
-            (lst["term"], lst["field"]): lst for lst in lists
-            if len(lst["docs"])}
-        qids, dids, scores = [], [], []
-        for qid, terms in qmap:
+            (lst["term"], lst["field"]): lst
+            for lst in _decode_group(g, stats, p) if len(lst["docs"])}
+
+        def term_lists(terms) -> list[dict]:
             q_lists = []
             for t in terms:
                 fl = [by_tf[(t, f)] for f in (FIELD_BODY, FIELD_KP)
                       if (t, f) in by_tf]
-                if not fl:
-                    continue
                 if len(fl) == 1:
-                    lst = fl[0]
                     # a single disjunct IS the max; tie never applies
-                    q_lists.append({"docs": lst["docs"],
-                                    "contribs": lst["contribs"],
-                                    "boost": lst["boost"]})
-                    continue
-                b, kp = fl
-                u = np.union1d(b["docs"], kp["docs"])
-                cb = np.zeros(len(u), dtype=np.float64)
-                ck = np.zeros(len(u), dtype=np.float64)
-                cb[np.searchsorted(u, b["docs"])] = b["boost"] * b["contribs"]
-                ck[np.searchsorted(u, kp["docs"])] = kp["boost"] * kp["contribs"]
-                comb = np.maximum(cb, ck) + tie * np.minimum(cb, ck)
-                q_lists.append({"docs": u, "contribs": comb, "boost": 1.0})
-            for d, s in _taat_topk_lists_presorted(q_lists, k):
-                qids.append(qid)
-                dids.append(d)
-                scores.append(s)
-        return pd.DataFrame({
-            "query_id": pd.Series(qids, dtype="int64"),
-            "doc_id": pd.Series(dids, dtype="int64"),
-            "score": pd.Series(scores, dtype="float64"),
-        })
+                    q_lists.append(fl[0])
+                elif fl:
+                    b, kp = fl
+                    u = np.union1d(b["docs"], kp["docs"])
+                    cb = np.zeros(len(u), dtype=np.float64)
+                    ck = np.zeros(len(u), dtype=np.float64)
+                    cb[np.searchsorted(u, b["docs"])] = b["boost"] * b["contribs"]
+                    ck[np.searchsorted(u, kp["docs"])] = kp["boost"] * kp["contribs"]
+                    comb = np.maximum(cb, ck) + tie * np.minimum(cb, ck)
+                    q_lists.append({"docs": u, "contribs": comb, "boost": 1.0})
+            return q_lists
 
-    partials = hits.groupBy("segment").applyInPandas(
-        kernel, "query_id long, doc_id long, score double")
-    w = Window.partitionBy("query_id").orderBy(F.col("score").desc(),
-                                               F.col("doc_id"))
-    return (partials.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "rank", "doc_id", "score"))
+        return _topk_rows((qid, _taat_topk(term_lists(terms), k))
+                          for qid, terms in qmap)
 
-
-def _taat_topk_lists_presorted(q_lists: list[dict], k: int) -> list[tuple[int, float]]:
-    """`_taat_topk` accumulation over lists whose order the CALLER fixed
-    (clause order, not (term, field)) — synonym clauses have no term key."""
-    q_lists = [lst for lst in q_lists if len(lst["docs"])]
-    if not q_lists:
-        return []
-    docs = np.concatenate([lst["docs"] for lst in q_lists])
-    contribs = np.concatenate([lst["boost"] * lst["contribs"] for lst in q_lists])
-    uniq, inv = np.unique(docs, return_inverse=True)
-    acc = np.zeros(len(uniq), dtype=np.float64)
-    np.add.at(acc, inv, contribs)
-    order = np.lexsort((uniq, -acc))[:k]
-    return [(int(uniq[i]), float(acc[i])) for i in order]
+    return sq.run(all_terms, kernel, k=k)
 
 
 def _fuzzy_expand(spark: SparkSession, postings: DataFrame,
@@ -1528,11 +1553,8 @@ def _fuzzy_expand(spark: SparkSession, postings: DataFrame,
     src_df = spark.createDataFrame([(s,) for s in srcs], "src string")
     vocab = postings.select("term").distinct()
     if prefix_len > 0:
-        cond = None
-        for pre in sorted({s[:prefix_len] for s in srcs}):
-            c = F.col("term").startswith(pre)
-            cond = c if cond is None else (cond | c)
-        vocab = vocab.filter(cond)
+        vocab = vocab.filter(_any_of(F.col("term").startswith(pre) for pre in
+                                     sorted({s[:prefix_len] for s in srcs})))
     join_cond = F.levenshtein(F.col("term"), F.col("src"), max_edits) >= 0
     if prefix_len > 0:
         join_cond = join_cond & (
@@ -1579,8 +1601,7 @@ def fuzzy_topk(
             for qid, terms in queries]
     srcs = sorted({t for _, terms in qmap for t in terms})
     if not srcs:
-        return spark.createDataFrame(
-            [], "query_id long, rank int, doc_id long, score double")
+        return spark.createDataFrame([], _TOPK)
     if postings is None:
         postings = load_postings(spark, index_dir)
     matched = _fuzzy_expand(spark, postings, srcs, max_edits,
@@ -1589,18 +1610,14 @@ def fuzzy_topk(
     for r in matched:
         expanded[r["src"]].append(r["term"])
     for s, terms in expanded.items():
-        if len(terms) > max_expansion:
-            raise ValueError(
-                f"fuzzy '{s}'~{max_edits} expands to {len(terms)} terms "
-                f"(> max_expansion={max_expansion}) — raise prefix_len, "
-                "lower max_edits, or raise the cap")
+        _check_expansion(f"fuzzy '{s}'~{max_edits}", terms, max_expansion,
+                         "raise prefix_len, lower max_edits,")
     term_queries = [
         (qid, sorted({t for s in terms for t in expanded[s]}))
         for qid, terms in qmap]
     term_queries = [(qid, ts) for qid, ts in term_queries if ts]
     if not term_queries:
-        return spark.createDataFrame(
-            [], "query_id long, rank int, doc_id long, score double")
+        return spark.createDataFrame([], _TOPK)
     return batch_topk(spark, index_dir, term_queries, p, k=k,
                       postings=postings, **topk_kw)
 
@@ -1626,27 +1643,16 @@ def match_counts(
     """
     if min_match < 1:
         raise ValueError("min_match must be >= 1")
-    qmap = [(int(qid), sorted({t.partition("^")[0] for t in terms}))
-            for qid, terms in queries]
+    sq = _SegmentQuery(spark, index_dir, postings)
+    qmap = _bare_queries(queries)
     all_terms = sorted({t for _, terms in qmap for t in terms})
+    schema = "query_id long, n_docs long"
     if not all_terms:
-        return spark.createDataFrame([], "query_id long, n_docs long")
-    if postings is None:
-        postings = load_postings(spark, index_dir)
-    hits = (postings.filter(F.col("term").isin(all_terms))
-            .select("term", "segment", "docs_vb"))
+        return sq.empty(schema)
 
-    def kernel(_key: tuple, g: pd.DataFrame) -> pd.DataFrame:
-        by_term: dict[str, np.ndarray] = {}
-        for i in range(len(g)):
-            ids = delta_decode(
-                varbyte_decode(g["docs_vb"].iloc[i]).astype(np.int64))
-            t = g["term"].iloc[i]
-            prev = by_term.get(t)
-            # union the term's field lists: a doc matching in either
-            # field counts once for that term
-            by_term[t] = ids if prev is None else np.union1d(prev, ids)
-        qids, counts = [], []
+    def kernel(g: pd.DataFrame, _side: _Side) -> pd.DataFrame:
+        by_term = _term_doc_ids(g)
+        rows = []
         for qid, terms in qmap:
             lists = [by_term[t] for t in terms if t in by_term]
             if not lists:
@@ -1659,15 +1665,13 @@ def match_counts(
                 uniq, cnt = np.unique(allv, return_counts=True)
                 n = int((cnt >= min(min_match, len(terms))).sum())
             if n:
-                qids.append(qid)
-                counts.append(n)
-        return pd.DataFrame({"query_id": pd.Series(qids, dtype="int64"),
-                             "n_docs": pd.Series(counts, dtype="int64")})
+                rows.append((qid, n))
+        return _frame(rows, schema)
 
-    partials = hits.groupBy("segment").applyInPandas(
-        kernel, "query_id long, n_docs long")
-    return (partials.groupBy("query_id")
-            .agg(F.sum("n_docs").alias("n_docs")))
+    return sq.run(all_terms, kernel, schema,
+                  merge=lambda df: df.groupBy("query_id")
+                  .agg(F.sum("n_docs").alias("n_docs")),
+                  cols=("term", "segment", "docs_vb"))
 
 
 def facet_counts(
@@ -1690,58 +1694,33 @@ def facet_counts(
 
     Requires ``build_index(..., attrs=(..., attr, ...))``.
     """
-    stats_all = load_stats(index_dir)
-    if attr not in stats_all.get("attrs", []):
-        raise ValueError(
-            f"index at {index_dir} has no attribute postings for '{attr}'; "
-            f"built with attrs={stats_all.get('attrs', [])}")
-    qmap = [(int(qid), sorted({t.partition('^')[0] for t in terms}))
-            for qid, terms in queries]
+    sq = _SegmentQuery(spark, index_dir, postings)
+    sq.require_attrs([attr])
+    qmap = _bare_queries(queries)
     all_terms = sorted({t for _, terms in qmap for t in terms})
+    schema = "query_id long, value string, n_docs long"
     if not all_terms:
-        return spark.createDataFrame([], "query_id long, value string, n_docs long")
-    if postings is None:
-        postings = load_postings(spark, index_dir)
-    flt = (load_attrs(spark, index_dir).filter(F.col("attr") == attr)
-           .groupBy("segment")
-           .agg(F.collect_list(F.struct("value", "docs_vb")).alias("vals")))
-    hits = (postings.filter(F.col("term").isin(all_terms))
-            .select("term", "segment", "docs_vb")
-            .join(flt, "segment"))
+        return sq.empty(schema)
 
-    def kernel(_key: tuple, g: pd.DataFrame) -> pd.DataFrame:
-        vals = g["vals"].iloc[0]
-        value_docs = [(r["value"],
-                       delta_decode(varbyte_decode(r["docs_vb"])
-                                    .astype(np.int64))) for r in vals]
-        by_term: dict[str, list[np.ndarray]] = {}
-        for i in range(len(g)):
-            ids = delta_decode(
-                varbyte_decode(g["docs_vb"].iloc[i]).astype(np.int64))
-            by_term.setdefault(g["term"].iloc[i], []).append(ids)
-        qids, values, counts = [], [], []
+    def kernel(g: pd.DataFrame, side: _Side) -> pd.DataFrame:
+        by_term = _term_doc_ids(g)
+        rows = []
         for qid, terms in qmap:
-            lists = [ids for t in terms for ids in by_term.get(t, [])]
+            lists = [by_term[t] for t in terms if t in by_term]
             if not lists:
                 continue
             matched = lists[0] if len(lists) == 1 else \
                 np.unique(np.concatenate(lists))
-            for v, ids in value_docs:
-                idx = np.searchsorted(ids, matched)
-                n = int(((idx < len(ids))
-                         & (ids[np.minimum(idx, len(ids) - 1)] == matched)).sum())
+            for v, ids in side.values:
+                n = int(np.isin(matched, ids, assume_unique=True).sum())
                 if n:
-                    qids.append(qid)
-                    values.append(v)
-                    counts.append(n)
-        return pd.DataFrame({"query_id": pd.Series(qids, dtype="int64"),
-                             "value": pd.Series(values, dtype="object"),
-                             "n_docs": pd.Series(counts, dtype="int64")})
+                    rows.append((qid, v, n))
+        return _frame(rows, schema)
 
-    partials = hits.groupBy("segment").applyInPandas(
-        kernel, "query_id long, value string, n_docs long")
-    return (partials.groupBy("query_id", "value")
-            .agg(F.sum("n_docs").alias("n_docs")))
+    return sq.run(all_terms, kernel, schema,
+                  merge=lambda df: df.groupBy("query_id", "value")
+                  .agg(F.sum("n_docs").alias("n_docs")),
+                  cols=("term", "segment", "docs_vb"), attr=attr)
 
 
 def facet_ranges(
@@ -1839,8 +1818,6 @@ def more_like_this(
     the SQL oracle; everything that scales (the search) stays the
     distributed batch path. Extra kwargs pass through to ``batch_topk``.
     """
-    from dlkp_spark.config import FIELD_BODY
-
     p = p or BM25Params()
     k = k or p.k
     stats = load_stats(index_dir)
@@ -1867,18 +1844,12 @@ def more_like_this(
         if qterms:
             queries.append((d, qterms))
     if not queries:
-        return spark.createDataFrame(
-            [], "query_id long, rank int, doc_id long, score double")
+        return spark.createDataFrame([], _TOPK)
     # k+1 then drop the source: it can occupy at most one slot, so the
     # exclusion happens before the FINAL truncation — no similar doc is
     # ever displaced by the source itself
     hits = batch_topk(spark, index_dir, queries, p, k + 1, **topk_kw)
-    w = Window.partitionBy("query_id").orderBy(F.col("score").desc(),
-                                               F.col("doc_id"))
-    return (hits.filter(F.col("doc_id") != F.col("query_id"))
-            .withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "rank", "doc_id", "score"))
+    return _rank(hits.filter(F.col("doc_id") != F.col("query_id")), k)
 
 
 def explain_scores(
@@ -1899,60 +1870,33 @@ def explain_scores(
     of hits reads a handful of posting rows regardless of index size.
     """
     p = p or BM25Params()
-    stats_all = load_stats(index_dir)
-    stats = {"n_docs": stats_all["n_docs"], "avgdl": stats_all["avgdl"]}
-    seg_docs = int(stats_all.get("segment_docs") or 0)
+    sq = _SegmentQuery(spark, index_dir, postings)
+    stats = sq.stats
+    seg_docs = int(sq.meta.get("segment_docs") or 0)
     if not seg_docs:
         raise ValueError(f"{index_dir}: stats.json has no segment_docs")
     wanted = np.asarray(sorted({int(d) for d in doc_ids}), dtype=np.int64)
-    qmap = [(int(qid), sorted({t.partition("^")[0] for t in terms}))
-            for qid, terms in queries]
+    qmap = _bare_queries(queries)
     all_terms = sorted({t for _, ts in qmap for t in ts})
-    schema = ("query_id long, doc_id long, term string, field int, "
-              "tf long, df long, contribution double")
+    schema = ("query_id long, doc_id long, term string, field int, tf long, "
+              "df long, contribution double")
     if not all_terms or not len(wanted):
-        return spark.createDataFrame([], schema)
+        return sq.empty(schema)
     segs = sorted({int(d) // seg_docs for d in wanted})
-    if postings is None:
-        postings = load_postings(spark, index_dir)
-    hits = postings.filter(F.col("segment").isin(segs)
-                           & F.col("term").isin(all_terms))
 
-    def kernel(_key: tuple, g: pd.DataFrame) -> pd.DataFrame:
-        lists = _decode_group(g, stats, p)
-        # tf values ride along for the breakdown (decode again is cheap
-        # here — explain touches a handful of rows)
-        tfs = [decode_postings_batch([g["docs_vb"].iloc[i]],
-                                     [g["tfs_vb"].iloc[i]],
-                                     [g["dls_vb"].iloc[i]])[1]
-               for i in range(len(g))]
-        dfv = g["df"].to_numpy()
-        out = {k: [] for k in ("query_id", "doc_id", "term", "field",
-                               "tf", "df", "contribution")}
-        for qid, terms in qmap:
-            for i, lst in enumerate(lists):
-                if lst["term"] not in terms:
-                    continue
-                mask = np.isin(lst["docs"], wanted)
-                if not mask.any():
-                    continue
-                contrib = lst["boost"] * lst["contribs"][mask]
-                for d, t_, c in zip(lst["docs"][mask],
-                                    tfs[i][np.flatnonzero(mask)], contrib):
-                    out["query_id"].append(qid)
-                    out["doc_id"].append(int(d))
-                    out["term"].append(lst["term"])
-                    out["field"].append(lst["field"])
-                    out["tf"].append(int(t_))
-                    out["df"].append(int(dfv[i]))
-                    out["contribution"].append(float(c))
-        return pd.DataFrame(out) if out["doc_id"] else pd.DataFrame(
-            {k: pd.Series([], dtype=dt) for k, dt in
-             [("query_id", "int64"), ("doc_id", "int64"), ("term", "object"),
-              ("field", "int32"), ("tf", "int64"), ("df", "int64"),
-              ("contribution", "float64")]})
+    def kernel(g: pd.DataFrame, _side: _Side) -> pd.DataFrame:
+        rows = []
+        for lst, df in zip(_decode_group(g, stats, p), g["df"]):
+            mask = np.isin(lst["docs"], wanted)
+            hits = list(zip(lst["docs"][mask], lst["tfs"][mask],
+                            lst["boost"] * lst["contribs"][mask]))
+            rows += [(qid, int(d), lst["term"], lst["field"], int(tf), int(df),
+                      float(c)) for qid, terms in qmap if lst["term"] in terms
+                     for d, tf, c in hits]
+        return _frame(rows, schema)
 
-    return hits.groupBy("segment").applyInPandas(kernel, schema)
+    return sq.run(all_terms, kernel, schema, merge=None,
+                  where=F.col("segment").isin(segs))
 
 
 def two_wave_pair_counts(
@@ -1971,51 +1915,34 @@ def two_wave_pair_counts(
     METADATA only). The postings ratio is the scale-transferable number:
     per-pair decode+score work is what dominates at 10^12 docs, while
     local wall-clock at bench scale is mostly fixed per-stage constants
-    (see BASELINE.md round-5 notes). Runs the same wave-1 kernel to obtain
-    the exact thresholds, so counts match what the query path actually
-    skips (used by tests + the bench demonstration)."""
+    (see BASELINE.md round-5 notes). Builds its pairs with the same
+    helper as the query path (``_two_wave_pairs``: boost syntax, query
+    weights, the wave-1 kernel and its exact thresholds), so counts match
+    what the query path actually skips (used by tests + the bench
+    demonstration)."""
     p = p or BM25Params()
     k = k or p.k
-    stats_all = load_stats(index_dir)
-    stats = {"n_docs": stats_all["n_docs"], "avgdl": stats_all["avgdl"]}
-    block_size_meta = stats_all.get("block_size", 64)
-    qmap = [(qid, sorted(set(terms))) for qid, terms in queries]
-    pair_rows = [(qid, t) for qid, terms in qmap for t in terms]
-    qt_df = spark.createDataFrame(pair_rows, "query_id long, term string")
-    postings = load_postings(spark, index_dir)
-    hits = postings.filter(
-        F.col("term").isin(sorted({t for _, ts in qmap for t in ts})))
-    boost = F.when(F.col("field") == FIELD_KP, F.lit(p.kp_boost)).otherwise(F.lit(1.0))
-    ub = (postings.select("term", "field", "segment", "max_contrib", "n_postings")
-          .join(F.broadcast(qt_df), "term")
-          .groupBy("query_id", "segment")
-          .agg(F.sum(F.col("max_contrib") * boost).alias("ub"),
-               F.sum("n_postings").alias("np"))
-          .persist())
+    sq = _SegmentQuery(spark, index_dir)
+    qmap, qweights = _parse_queries(queries)
+    fn = _make_batch_kernel(qmap, sq.stats, p, k, sq.block_size,
+                            qweights=qweights)
+    hits, kernel = sq.scan(sorted({t for _, ts in qmap for t in ts}), fn)
+    kept: list[DataFrame] = []
+
+    def keep(df: DataFrame) -> DataFrame:
+        kept.append(df.persist())
+        return kept[-1]
+
+    def count(df: DataFrame):
+        return df.agg(F.count(F.lit(1)).alias("c"), F.sum("np").alias("s")).collect()[0]
+
     try:
-        tot = ub.agg(F.count(F.lit(1)).alias("c"), F.sum("np").alias("s")).collect()[0]
-        uw = Window.partitionBy("query_id").orderBy(F.col("ub").desc(), F.col("segment"))
-        w1_pairs = (ub.withColumn("rn", F.row_number().over(uw))
-                    .filter(F.col("rn") <= wave1_segments)
-                    .select("query_id", "segment", "np"))
-        kernel = _make_batch_kernel(qmap, stats, p, k, block_size_meta, scoped=True)
-        w1 = _scoped_partials(hits, w1_pairs.drop("np"), kernel)
-        w = Window.partitionBy("query_id").orderBy(F.col("score").desc(), F.col("doc_id"))
-        theta = (w1.withColumn("rn", F.row_number().over(w))
-                 .filter(F.col("rn") == k)
-                 .select("query_id", F.col("score").alias("theta")))
-        agg1 = w1_pairs.agg(F.count(F.lit(1)).alias("c"),
-                            F.sum("np").alias("s")).collect()[0]
-        agg2 = (ub.join(w1_pairs.select("query_id", "segment")
-                        .withColumn("w1", F.lit(True)),
-                        ["query_id", "segment"], "left")
-                .filter(F.col("w1").isNull())
-                .join(theta, "query_id", "left")
-                .filter(F.col("theta").isNull() | (F.col("ub") >= F.col("theta")))
-                .agg(F.count(F.lit(1)).alias("c"), F.sum("np").alias("s"))
-                .collect()[0])
+        ub, w1_pairs, _, w2_pairs = _two_wave_pairs(
+            sq, hits, kernel, qmap, qweights, p, k, wave1_segments, keep)
+        tot, agg1, agg2 = count(ub), count(w1_pairs), count(w2_pairs)
     finally:
-        ub.unpersist()
+        for df in kept:
+            df.unpersist()
     scored = int(agg1["c"]) + int(agg2["c"])
     return {"pairs_total": int(tot["c"]), "pairs_scored": scored,
             "pairs_skipped": int(tot["c"]) - scored,

@@ -1,10 +1,10 @@
-"""batch_topk's plan choice: under ``SINGLE_TASK_MAX_ROWS`` a one-wave
-query runs as one task (coalesce(1) + mapInPandas, the task ranks);
-above it the segment-parallel plan (groupBy(segment).applyInPandas + the
-row_number window) runs. Both run the same per-segment kernel, so every
-call here must return identical rows under both plans: the cutoff at its
-value (the fixtures are small, so the one-task plan) and at 0 (the
-parallel plan).
+"""The segment-query plan choice: under ``SINGLE_TASK_MAX_ROWS`` a
+one-wave query runs as one task (coalesce(1) + mapInPandas; top-k calls
+rank in the task); above it the segment-parallel plan
+(groupBy(segment).applyInPandas + the row_number window) runs. Both run
+the same per-segment kernel, so every call here must return identical
+rows under both plans: the cutoff at its value (the fixtures are small,
+so the one-task plan) and at 0 (the parallel plan).
 """
 
 import pytest
@@ -15,6 +15,8 @@ from dlkp_spark.corpus import generate_web_pages
 from dlkp_spark.index.build import build_index, prepare_docs
 from dlkp_spark.oracle import reference_query_set
 from dlkp_spark.query import wand
+
+from test_plans import TERMS, _segment_queries, query_table  # noqa: F401
 
 N_PAGES = 240
 N_DUPS = 60
@@ -125,3 +127,33 @@ def test_no_match_is_empty_with_same_schema(spark, index_dir, monkeypatch):
     assert r1 == r2 == []
     assert s1 == s2
     assert [f.name for f in s1.fields] == ["query_id", "rank", "doc_id", "score"]
+
+
+
+@pytest.mark.parametrize("entry", sorted(_segment_queries())
+                         + ["batch_topk_deletes", "batch_topk_filtered"])
+def test_segment_query_entry_identical(spark, query_table, monkeypatch,
+                                       entry):
+    """Every segment-query entry point, and batch_topk with an attribute
+    filter or tombstones (both once pinned to the parallel plan), returns
+    the same rows and schema on both plans."""
+    t, d = query_table
+    q = [(0, TERMS)]
+    dead = set()
+    if entry == "batch_topk_filtered":
+        def call():
+            return wand.batch_topk(spark, d, q, k=5,
+                                   filters={"lang": ["en", "de"]})
+    elif entry == "batch_topk_deletes":
+        dead = {r.doc_id for r in wand.batch_topk(spark, d, q, k=3).collect()}
+        dels = spark.createDataFrame([(x,) for x in sorted(dead)], "doc_id long")
+
+        def call():
+            return wand.batch_topk(spark, d, q, k=5, deletes=dels)
+    else:
+        def call():
+            return _segment_queries()[entry](spark, t, d)
+    rows = _assert_same(spark, monkeypatch, call)
+    assert rows, entry
+    if dead:
+        assert not dead & {r[2] for r in rows}, rows

@@ -102,16 +102,18 @@ def test_query_terms_are_a_pushed_scan_predicate(spark, query_table, entry):
     assert not re.search(r"Join[^\n]*\[term#", plan), plan
 
 
-def test_single_query_job_budget(spark, index_dir):
-    """A 1-query batch_topk runs exactly one Spark job once the listing
-    cache is warm: the small-query plan is one task with no exchange, and
-    no job exists just to ship the query terms."""
-    from dlkp_spark.query.wand import batch_topk
+@pytest.mark.parametrize("entry", ["batch_topk", "dismax_topk"])
+def test_single_query_job_budget(spark, index_dir, entry):
+    """A 1-query batch_topk or dismax_topk runs exactly one Spark job once
+    the listing cache is warm: the small-query plan is one task with no
+    exchange, and no job exists just to ship the query terms."""
+    from dlkp_spark.query import wand
 
+    call = getattr(wand, entry)
     q = [(0, TERMS)]
-    batch_topk(spark, index_dir, q, k=5).collect()  # warm the listing cache
+    call(spark, index_dir, q, k=5).collect()  # warm the listing cache
     jobs = jobs_of(spark.sparkContext,
-                   lambda: batch_topk(spark, index_dir, q, k=5).collect())
+                   lambda: call(spark, index_dir, q, k=5).collect())
     assert len(jobs) == 1, jobs
 
 

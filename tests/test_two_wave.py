@@ -91,6 +91,21 @@ def test_two_wave_skips_segments_on_selective_query(spark, skew_index):
     assert one == two
 
 
+def test_pair_counts_read_boost_syntax(spark, skew_index):
+    """two_wave_pair_counts parses ``term^w`` like batch_topk: a boosted
+    query reports the same pairs and postings as the unboosted one, and
+    its weighted upper bound still prunes."""
+    plain = two_wave_pair_counts(spark, skew_index,
+                                 [(0, ["goldterm"]), (1, ["goldterm", "filler"])],
+                                 BM25Params(), k=5)
+    boosted = two_wave_pair_counts(spark, skew_index,
+                                   [(0, ["goldterm^2"]), (1, ["goldterm^3", "filler"])],
+                                   BM25Params(), k=5)
+    assert boosted["pairs_total"] == plain["pairs_total"] > 0, (plain, boosted)
+    assert boosted["postings_total"] == plain["postings_total"]
+    assert boosted["pairs_skipped"] > 0, boosted
+
+
 def test_two_wave_fewer_than_k_results_unpruned(spark, skew_index):
     # a query with < k total hits must not lose rows to pruning (no theta)
     queries = [(0, ["w3"])]
@@ -108,7 +123,7 @@ def test_batch_kernel_dense_width_guard(spark, index_dir):
 
     from dlkp_spark.config import BM25Params as BP
     from dlkp_spark.index.build import load_postings, load_stats
-    from dlkp_spark.query.wand import _make_batch_kernel
+    from dlkp_spark.query.wand import _make_batch_kernel, _Side
 
     stats_all = load_stats(index_dir)
     stats = {"n_docs": stats_all["n_docs"], "avgdl": stats_all["avgdl"]}
@@ -117,11 +132,11 @@ def test_batch_kernel_dense_width_guard(spark, index_dir):
     pdf = (load_postings(spark, index_dir)
            .filter("segment = 0").toPandas())
     p = BP()
-    dense_kernel = _make_batch_kernel(qmap, stats, p, K, bs, scoped=False)
-    narrow_kernel = _make_batch_kernel(qmap, stats, p, K, bs, scoped=False,
+    dense_kernel = _make_batch_kernel(qmap, stats, p, K, bs)
+    narrow_kernel = _make_batch_kernel(qmap, stats, p, K, bs,
                                        dense_max_width=4)
-    a = dense_kernel(None, pdf.copy())
-    b = narrow_kernel(None, pdf.copy())
+    a = dense_kernel(pdf.copy(), _Side())
+    b = narrow_kernel(pdf.copy(), _Side())
     pd.testing.assert_frame_equal(
         a.sort_values(["query_id", "doc_id"]).reset_index(drop=True),
         b.sort_values(["query_id", "doc_id"]).reset_index(drop=True))
